@@ -48,6 +48,18 @@ SUBSET = [
     "q157_anomaly_ensemble",
     "q194_histogram_quantile",
     "q203_compress_audit",     # all-NULL series through the r10 n_rep==0 guard
+    # operators with a single engine (their DuckDB oracle is the spec):
+    # the production kernels on the adversarial corpus
+    "q94_winnowing_fp",        # hashlib winnowing on empty/unicode docs
+    "q95_winnowing_overlap",   # shared-fingerprint pairs over dup clusters
+    "q109_pq_knn",             # numpy PQ argmin on duplicate/tiny-norm vectors
+    "q112_bpe_train",          # driver-local merge loop, tie rule
+    "q113_bpe_encode",         # heap replay on empty/unicode docs
+    "q118_jl_project",         # sequential-fold projection, full precision
+    "q120_bpe_fertility",      # train + encode + lang join
+    "q152_containment_pairs",  # containment over dup/empty docs
+    "q169_containment_windowed",  # tile band keys over the fuzz corpus
+    "q181_theilsen_trend",     # numpy pair kernel on the all-NULL series
 ]
 
 

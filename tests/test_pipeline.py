@@ -1,5 +1,5 @@
-"""Pipeline operator unit tests: MinHash engine parity, near-dup
-detection on fabricated duplicates, SimHash locality."""
+"""Pipeline operator unit tests: near-dup detection on fabricated
+duplicates, SimHash locality."""
 
 from __future__ import annotations
 
@@ -22,16 +22,6 @@ DOCS = [
 
 def _docs(spark):
     return spark.createDataFrame(DOCS, "doc_id long, text string")
-
-
-def test_minhash_engine_parity(spark):
-    """The hashlib mapInPandas stage must be bit-identical to the
-    pure-expression specification (same md5 inputs, same minima)."""
-    d = _docs(spark)
-    a = {tuple(r) for r in dd.minhash_lsh_candidates(d, engine="pandas").collect()}
-    b = {tuple(r) for r in dd.minhash_lsh_candidates(d, engine="sql").collect()}
-    assert a == b
-    assert a, "fabricated dups must produce at least one candidate pair"
 
 
 def test_exact_dedup_members_cap(spark):
@@ -160,12 +150,11 @@ def test_banded_keys_xxh64_fused_matches_two_step(spark):
 
 def test_minhash_null_text_expression_engines(spark):
     """TWO null docs must not pair with each other: shingles(NULL) is
-    [NULL], and null-skipping hashes (md5-concat via least, xxhash64
-    natively) would give every null doc the SAME signature — one fake
-    bucket pairing all null docs. The single-null parity test missed
-    this because the size>1 bucket filter hid a lone null doc; the
-    expression engines now drop null docs at the shingle stage like the
-    pandas engine always did."""
+    [NULL], and a null-skipping hash (xxhash64 natively) would give
+    every null doc the SAME signature — one fake bucket pairing all null
+    docs. A single null doc misses this because the size>1 bucket
+    filter hides it; the xxh64 engine drops null docs at the shingle
+    stage like the pandas engine always did."""
     df = spark.createDataFrame(
         [
             (1, "the quick brown fox jumps over the lazy dog"),
@@ -175,7 +164,7 @@ def test_minhash_null_text_expression_engines(spark):
         ],
         "doc_id long, text string",
     )
-    for engine in ("sql", "xxh64", "pandas"):
+    for engine in ("xxh64", "pandas"):
         got = sorted(
             (r["id_a"], r["id_b"], r["n_bands"])
             for r in dd.minhash_lsh_candidates(df, engine=engine).collect()
@@ -334,9 +323,9 @@ def test_frame_sample_plumbing(spark):
 
 
 def test_minhash_null_text_both_engines(spark):
-    """NULL text must not crash the pandas engine and both engines must
-    agree: the expression path drops null docs (md5(NULL) band keys
-    explode to nothing), so the hashlib path skips them too."""
+    """NULL text must not crash the pandas engine: the hashlib path
+    skips null docs (no shingles, no band keys), so the pair set is the
+    one the non-null docs give."""
     from ticktock_spark.pipeline.dedup import minhash_lsh_candidates
 
     df = spark.createDataFrame(
@@ -351,11 +340,7 @@ def test_minhash_null_text_both_engines(spark):
         (r["id_a"], r["id_b"], r["n_bands"])
         for r in minhash_lsh_candidates(df, engine="pandas").collect()
     )
-    got_s = sorted(
-        (r["id_a"], r["id_b"], r["n_bands"])
-        for r in minhash_lsh_candidates(df, engine="sql").collect()
-    )
-    assert got_p == got_s == [(1, 2, 4)]
+    assert got_p == [(1, 2, 4)]
 
 
 def test_ivf_index_persistence_and_pruning(spark, tmp_path):
@@ -1372,17 +1357,6 @@ def test_winnowing_overlap_bucket_cap(spark):
     assert len(full) == 20 * 19 // 2 and not any(100 in p for p in full)
 
 
-def test_winnowing_engines_agree(spark):
-    """The hashlib pandas engine and the pure-expression spec must emit
-    identical (doc, fp) sets."""
-    from ticktock_spark.pipeline.text import winnowing_fingerprints
-
-    d = _docs(spark)
-    a = sorted(map(tuple, winnowing_fingerprints(d, engine="pandas").collect()))
-    b = sorted(map(tuple, winnowing_fingerprints(d, engine="sql").collect()))
-    assert a == b and len(a) > 0
-
-
 def test_image_dhash_and_neardup_pairs(spark):
     """Perceptual image near-dup: dHash is invariant under monotone
     brightness shifts and nearest-neighbor upscaling (the transforms a
@@ -1754,30 +1728,30 @@ def test_heavy_hitters_exact_under_collisions(spark):
 
 
 def test_pq_encode_matches_numpy_reference(spark):
-    """pq_encode's literal-expression argmin must agree with a direct
-    numpy PQ encoder (same bucket-mean codebooks) on every vector, and
-    break distance ties toward the lowest code."""
+    """pq_encode's argmin must agree with a direct per-codeword PQ
+    encoder on every vector — both codebook flavors (bucket-mean and
+    kmeans-trained) — and break distance ties toward the lowest code."""
     import numpy as np
 
     from ticktock_spark.pipeline import similarity as sim
     from ticktock_spark.schema import load_table
 
     e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cb = sim.pq_codebooks(e, m=4)
-    m, dsub, cbd = sim._pq_collect(cb)
-    got = {
-        r["vec_id"]: list(r["codes"]) for r in sim.pq_encode(e, cb).collect()
-    }
-
     pdf = e.select("vec_id", "embedding").toPandas()
-    for vid, vec in zip(pdf["vec_id"], pdf["embedding"]):
-        v = np.asarray(list(vec), dtype=np.float64)
-        want = []
-        for j in range(m):
-            sub = v[j * dsub : (j + 1) * dsub]
-            d2 = [(code, float(((sub - np.asarray(c)) ** 2).sum())) for code, c in cbd[j]]
-            want.append(min(d2, key=lambda t: (t[1], t[0]))[0])
-        assert got[vid] == want, vid
+    for cb in [sim.pq_codebooks(e, m=4), sim.pq_codebooks_kmeans(e, m=16, k=16)]:
+        m, dsub, cbd = sim._pq_collect(cb)
+        got = {
+            r["vec_id"]: list(r["codes"]) for r in sim.pq_encode(e, cb).collect()
+        }
+        for vid, vec in zip(pdf["vec_id"], pdf["embedding"]):
+            v = np.asarray(list(vec), dtype=np.float64)
+            v = v / max(float(np.linalg.norm(v)), 1e-30)
+            want = []
+            for j in range(m):
+                sub = v[j * dsub : (j + 1) * dsub]
+                d2 = [(code, float(((sub - np.asarray(c)) ** 2).sum())) for code, c in cbd[j]]
+                want.append(min(d2, key=lambda t: (t[1], t[0]))[0])
+            assert got[vid] == want, (m, vid)
 
     # tie-break: two identical codewords → lowest code wins
     tie = spark.createDataFrame(
@@ -1830,22 +1804,6 @@ def test_pq_knn_shape_and_recall(spark):
         t_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
     overlap = sum(len(exact_sets[qid] & t_sets[qid]) for qid in range(5))
     assert overlap >= 12  # measured 23/50; floor leaves partial-sum-drift margin
-
-
-def test_pq_encode_engine_parity(spark):
-    """The production numpy encoder must emit the identical codes as the
-    oracle expression engine — both codebook flavors."""
-    from ticktock_spark.pipeline import similarity as sim
-    from ticktock_spark.schema import load_table
-
-    e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    for cb, m in [(sim.pq_codebooks(e, m=4), 4),
-                  (sim.pq_codebooks_kmeans(e, m=16, k=16), 16)]:
-        a = {r["vec_id"]: list(r["codes"])
-             for r in sim.pq_encode(e, cb, engine="expr").collect()}
-        b = {r["vec_id"]: list(r["codes"])
-             for r in sim.pq_encode(e, cb, engine="numpy").collect()}
-        assert a == b, m
 
 
 def test_ivfpq_index_pruning_and_parity(spark, tmp_path):
@@ -1959,45 +1917,64 @@ def test_bpe_train_matches_reference(spark):
     """The distributed merge loop must produce the exact merge table a
     reference single-process BPE trainer computes from the same (word,
     count) vocabulary — same tie rule (max count, then pair asc), same
-    greedy left-to-right merge application."""
-    from ticktock_spark.pipeline.text import bpe_train, tokens
+    greedy left-to-right merge application — at k=5 and k=8; and
+    bpe_encode under the k=8 table must give every doc the subword
+    count a sequential replay of that table gives."""
+    from ticktock_spark.pipeline.text import bpe_encode, bpe_train, tokens
     from ticktock_spark.schema import load_table
 
     d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    got = [
-        (r["rank"], r["a"], r["b"], r["pair"], r["n"])
-        for r in bpe_train(d, num_merges=5).orderBy("rank").collect()
-    ]
+
+    def merge(syms, a, b):
+        out = []
+        for s in syms:
+            if out and out[-1] == a and s == b:
+                out[-1] = a + b
+            else:
+                out.append(s)
+        return out
 
     wc = {
         r["w"]: r["c"]
         for r in d.select(F.explode(tokens(F.col("text"))).alias("w"))
         .groupBy("w").agg(F.count(F.lit(1)).alias("c")).collect()
     }
-    state = [([ch for ch in w], c) for w, c in wc.items()]
-    want = []
-    for r in range(5):
-        counts = {}
-        for syms, c in state:
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                counts[p] = counts.get(p, 0) + c
-        if not counts:
-            break
-        best_n = max(counts.values())
-        a, b = min(p for p, c in counts.items() if c == best_n)
-        want.append((r + 1, a, b, a + b, best_n))
-        new_state = []
-        for syms, c in state:
-            out = []
-            for s in syms:
-                if out and out[-1] == a and s == b:
-                    out[-1] = a + b
-                else:
-                    out.append(s)
-            new_state.append((out, c))
-        state = new_state
-    assert got == want and len(got) == 5
+    for k in (5, 8):
+        m = bpe_train(d, num_merges=k)
+        got = [
+            (r["rank"], r["a"], r["b"], r["pair"], r["n"])
+            for r in m.orderBy("rank").collect()
+        ]
+        state = [([ch for ch in w], c) for w, c in wc.items()]
+        want = []
+        for r in range(k):
+            counts = {}
+            for syms, c in state:
+                for i in range(len(syms) - 1):
+                    p = (syms[i], syms[i + 1])
+                    counts[p] = counts.get(p, 0) + c
+            if not counts:
+                break
+            best_n = max(counts.values())
+            a, b = min(p for p, c in counts.items() if c == best_n)
+            want.append((r + 1, a, b, a + b, best_n))
+            state = [(merge(syms, a, b), c) for syms, c in state]
+        assert got == want and len(got) == k, k
+
+    table = [(a, b) for _, a, b, _, _ in want]
+    enc = {r["doc_id"]: (r["n_words"], r["n_subwords"])
+           for r in bpe_encode(d, m).collect()}
+    ref = {}
+    for r in d.select("doc_id", tokens(F.col("text")).alias("t")).collect():
+        if r["t"]:
+            n_sub = 0
+            for w in r["t"]:
+                syms = list(w)
+                for a, b in table:
+                    syms = merge(syms, a, b)
+                n_sub += len(syms)
+            ref[r["doc_id"]] = (len(r["t"]), n_sub)
+    assert enc == ref and len(enc) > 0
 
     # overlap rule: 'aaa' pairs disjointly
     tiny = spark.createDataFrame([(1, "aaa aaa")], "doc_id long, text string")
@@ -2026,29 +2003,6 @@ def test_bpe_encode_semantics(spark):
     assert got0 == {1: 8, 2: 4}
 
 
-def test_bpe_engines_parity(spark):
-    """The production engines (train='local', encode='arrow') must be
-    bit-identical to the 'sql' spec engines: same merge table at k=8 on
-    real documents, same per-doc subword accounting under that table."""
-    from ticktock_spark.pipeline.text import bpe_encode, bpe_train
-    from ticktock_spark.schema import load_table
-
-    d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    t_sql = [tuple(r) for r in bpe_train(d, num_merges=8).orderBy("rank").collect()]
-    t_loc = [
-        tuple(r)
-        for r in bpe_train(d, num_merges=8, engine="local").orderBy("rank").collect()
-    ]
-    assert t_sql == t_loc and len(t_loc) == 8
-
-    m = bpe_train(d, num_merges=8, engine="local")
-    e_sql = {r["doc_id"]: (r["n_words"], r["n_subwords"])
-             for r in bpe_encode(d, m).collect()}
-    e_arw = {r["doc_id"]: (r["n_words"], r["n_subwords"])
-             for r in bpe_encode(d, m, engine="arrow").collect()}
-    assert e_sql == e_arw and len(e_arw) > 0
-
-
 def test_bpe_encode_arrow_replay_order(spark):
     """Replay-in-order corner the heap must honor: a merge that CREATES
     a pair whose rank is EARLIER than the replay cursor must NOT fire
@@ -2071,11 +2025,9 @@ def test_bpe_encode_arrow_replay_order(spark):
         "rank int, a string, b string, pair string, n long",
     )
     for table, want_sub in ((fwd, 1), (bwd, 2)):
-        sql = {r["doc_id"]: r["n_subwords"]
+        got = {r["doc_id"]: r["n_subwords"]
                for r in bpe_encode(df, table).collect()}
-        arw = {r["doc_id"]: r["n_subwords"]
-               for r in bpe_encode(df, table, engine="arrow").collect()}
-        assert sql == arw == {1: want_sub, 2: 2 * want_sub}, (want_sub, sql, arw)
+        assert got == {1: want_sub, 2: 2 * want_sub}, (want_sub, got)
 
 
 def test_bpe_encode_ids(spark):
@@ -2089,7 +2041,7 @@ def test_bpe_encode_ids(spark):
         [(1, "abab ab"), (2, "ba")], "doc_id long, text string"
     )
     # merges: rank1 (a,b)->ab (most frequent: 3 positions)
-    m = bpe_train(df, num_merges=1, engine="local")
+    m = bpe_train(df, num_merges=1)
     rows = m.collect()
     assert [(r["a"], r["b"]) for r in rows] == [("a", "b")]
     vocab = {r["sym"]: r["token_id"] for r in bpe_vocab(df, m).collect()}
@@ -2135,7 +2087,7 @@ def test_bpe_decode_roundtrip(spark):
         [(1, "abab ab ba"), (2, "ba baba"), (3, "Mixed CASE, punct!")],
         "doc_id long, text string",
     )
-    m = bpe_train(df, num_merges=2, engine="local")
+    m = bpe_train(df, num_merges=2)
     v = bpe_vocab(df, m)
     dec = bpe_decode_ids(bpe_encode_ids(df, m, vocab_df=v), v)
     got = {r["doc_id"]: (r["decoded"], r["n_bad"]) for r in dec.collect()}
@@ -2199,22 +2151,17 @@ def test_pack_token_ids(spark):
 
 
 def test_bpe_sql_engine_merge_cap(spark):
-    """The sql replay chain refuses past _SQL_ENGINE_MAX_MERGES (Janino
-    64KB method limit at production vocab sizes) and points at arrow."""
-    import pytest
-
-    from ticktock_spark.pipeline.text import _SQL_ENGINE_MAX_MERGES, bpe_encode
+    """A 65-merge table — past where a one-replace()-per-merge SQL
+    chain stops resolving — encodes like any other: none of its merges
+    applies to 'ab', so the word stays two symbols."""
+    from ticktock_spark.pipeline.text import bpe_encode
 
     df = spark.createDataFrame([(1, "ab")], "doc_id long, text string")
     big = spark.createDataFrame(
-        [(i + 1, f"s{i}", f"t{i}", f"s{i}t{i}", 0)
-         for i in range(_SQL_ENGINE_MAX_MERGES + 1)],
+        [(i + 1, f"s{i}", f"t{i}", f"s{i}t{i}", 0) for i in range(65)],
         "rank int, a string, b string, pair string, n long",
     )
-    with pytest.raises(ValueError, match="arrow"):
-        bpe_encode(df, big)
-    # the arrow engine takes the same table in stride
-    got = bpe_encode(df, big, engine="arrow").collect()
+    got = bpe_encode(df, big).collect()
     assert [(r["n_words"], r["n_subwords"]) for r in got] == [(1, 2)]
 
 

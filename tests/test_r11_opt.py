@@ -1,9 +1,9 @@
 """Round-11 optimization parity tests: the rewritten hot paths must
 produce byte-identical rows to the engines they replaced.
 
-- theil_sen engine='arrow' (numpy pair kernel) vs engine='hof' (the
-  pure-expression spec) — including NULL-value series and duplicate
-  -bucket (equal-x) input;
+- theil_sen (numpy pair kernel) vs the rows the pure-expression
+  pair-array engine it replaced returned, recorded as literals —
+  including a NULL-value series and duplicate-bucket (equal-x) input;
 - cosine_argmax_partials + global max_by vs cosine_scores + max_by
   (the q190 shape) — the per-block partial argmax must reduce to the
   same global winner under the (cosine, -vec_id) order.
@@ -46,23 +46,29 @@ def _theilsen_frame(spark, seed=1107, n_series=4, null_series=True):
                 )
             )
     if null_series:
-        # all-NULL-value series: slope must come back NULL in both engines
+        # all-NULL-value series: slope must come back NULL
         for i in range(6):
             rows.append(Row(metric="mnull", ts=i * HOUR, value=None))
     return spark.createDataFrame(rows, "metric string, ts long, value double")
 
 
 def test_theilsen_arrow_matches_hof(spark):
+    # (metric, n, n_pairs, slope) as the pure-expression engine computed
+    # them for this frame
+    hof = [
+        ("m0", 28, 378, 1.146462),
+        ("m1", 32, 496, 0.943595),
+        ("m2", 13, 78, 0.87057),
+        ("m3", 17, 136, 1.136785),
+        ("mnull", 6, 15, None),
+    ]
     df = _theilsen_frame(spark)
-    arrow = theil_sen(df, ["metric"], HOUR, engine="arrow")
-    hof = theil_sen(df, ["metric"], HOUR, engine="hof")
-    a, h = _collect_sorted(arrow), _collect_sorted(hof)
-    assert a == h
-    assert any(t[0] == "mnull" and t[3] is None for t in a)
+    assert _collect_sorted(theil_sen(df, ["metric"], HOUR)) == hof
 
 
 def test_theilsen_arrow_matches_hof_duplicate_buckets(spark):
-    # two rows land in one bucket: equal-x pairs must be skipped by both
+    # two rows land in one bucket: equal-x pairs must be skipped (5 of
+    # the 6 index pairs remain), as the pure-expression engine did
     rows = [
         Row(metric="m", ts=0, value=1.0),
         Row(metric="m", ts=10, value=3.0),  # same bucket as ts=0
@@ -70,22 +76,20 @@ def test_theilsen_arrow_matches_hof_duplicate_buckets(spark):
         Row(metric="m", ts=2 * HOUR, value=5.0),
     ]
     df = spark.createDataFrame(rows)
-    assert _collect_sorted(
-        theil_sen(df, ["metric"], HOUR, engine="arrow")
-    ) == _collect_sorted(theil_sen(df, ["metric"], HOUR, engine="hof"))
+    assert _collect_sorted(theil_sen(df, ["metric"], HOUR)) == [("m", 4, 5, 1.0)]
 
 
 def test_theilsen_arrow_single_bucket_dropped(spark):
     rows = [Row(metric="m", ts=0, value=1.0), Row(metric="m", ts=10, value=2.0)]
     df = spark.createDataFrame(rows)
-    assert theil_sen(df, ["metric"], HOUR, engine="arrow").count() == 0
+    assert theil_sen(df, ["metric"], HOUR).count() == 0
 
 
 def test_theilsen_arrow_max_buckets_guard(spark):
     rows = [Row(metric="m", ts=i * HOUR, value=float(i)) for i in range(12)]
     df = spark.createDataFrame(rows)
     with pytest.raises(Exception, match="max_buckets"):
-        theil_sen(df, ["metric"], HOUR, max_buckets=10, engine="arrow").collect()
+        theil_sen(df, ["metric"], HOUR, max_buckets=10).collect()
 
 
 def _emb_frame(spark, seed=42, n=90, dim=8, n_ties=12):
@@ -366,8 +370,9 @@ def test_bpe_post_udf_filter_matches_prefilter(spark):
     size(_t) > 0 pre-filter that re-evaluated the whole tokens() chain
     in the Filter node. Row sets coincide: token_ids == [] iff
     _t == [] (every word replays to >= 1 id/symbol). Pin the edge
-    shapes (NULL / empty / whitespace / punct-only text) and parity
-    with the SQL spec engine."""
+    shapes (NULL / empty / whitespace / punct-only text) and the
+    (n_words, n_subwords) rows the SQL replace-chain engine it was
+    checked against returned."""
     from ticktock_spark.pipeline import text as tx
 
     docs = spark.createDataFrame(
@@ -390,14 +395,9 @@ def test_bpe_post_udf_filter_matches_prefilter(spark):
 
     enc = {
         r["doc_id"]: (r["n_words"], r["n_subwords"])
-        for r in tx.bpe_encode(docs, merges, engine="arrow").collect()
+        for r in tx.bpe_encode(docs, merges).collect()
     }
-    sql_rows = {
-        r["doc_id"]: (r["n_words"], r["n_subwords"])
-        for r in tx.bpe_encode(docs, merges, engine="sql").collect()
-    }
-    assert enc == sql_rows
-    assert sorted(enc) == [4, 5]
+    assert enc == {4: (3, 8), 5: (3, 6)}
 
 
 def _old_decode_netpbm_spec(payload: bytes):

@@ -230,13 +230,14 @@ def test_streaming_index_append_matches_batch(spark, tmp_path):
 
 
 def test_jl_project_engines_and_distortion(spark):
-    """numpy and expr engines are bit-identical (shared fold order);
-    the projection roughly preserves pairwise geometry (JL property,
-    deterministic here: fixed planes + fixed vectors)."""
+    """Each component equals a left-to-right fold over d of x[d]·s(b,d)
+    times 1/sqrt(out_dim), bit for bit (the SQL fold order q118's oracle
+    uses); the projection roughly preserves pairwise geometry (JL
+    property, deterministic here: fixed planes + fixed vectors)."""
     import math
     import random
 
-    from ticktock_spark.pipeline.similarity import jl_project
+    from ticktock_spark.pipeline.similarity import jl_project, srp_planes
 
     rng = random.Random(7)
     rows = [
@@ -244,11 +245,16 @@ def test_jl_project_engines_and_distortion(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     a = {r["vec_id"]: r["jl"] for r in jl_project(df, out_dim=32).collect()}
-    b = {
-        r["vec_id"]: r["jl"]
-        for r in jl_project(df, out_dim=32, engine="expr").collect()
-    }
-    assert a == b
+    planes = srp_planes(32, 64, 11).tolist()
+    scale = 1.0 / math.sqrt(32)
+    for r in df.collect():  # float32-rounded inputs, as Spark stores them
+        want = []
+        for plane in planes:
+            acc = 0.0
+            for x, sgn in zip(r["embedding"], plane):
+                acc += x * sgn
+            want.append(acc * scale)
+        assert a[r["vec_id"]] == want, r["vec_id"]
     assert all(len(v) == 32 for v in a.values())
 
     def dist(u, v):

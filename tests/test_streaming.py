@@ -1272,7 +1272,7 @@ def test_streaming_bpe_encode_ids_matches_batch(spark, tmp_path):
     train = spark.createDataFrame(
         [(100, "abab ab a b"), (101, "ba ab")], "doc_id long, text string"
     )
-    m = bpe_train(train, num_merges=1, engine="local")
+    m = bpe_train(train, num_merges=1)
     frozen = bpe_vocab(train, m)  # model freeze: vocab from TRAIN corpus
 
     rows = [(1, "ab ba"), (2, "abab")]

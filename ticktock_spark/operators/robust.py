@@ -94,7 +94,6 @@ def theil_sen(
     value_col: str = "value",
     ts_col: str = "ts",
     max_buckets: int = 5_000,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Theil–Sen slope per series: the MEDIAN of all pairwise slopes
     (y_j − y_i)/(x_j − x_i) over bucket indices — the robust twin of
@@ -103,172 +102,37 @@ def theil_sen(
     moves, where one spike already bends an OLS line).
 
     Output: (series..., n [buckets], n_pairs, slope) — slope in
-    value-units per bucket, 6-decimal. Series with a single bucket have
-    no pairwise slope and are dropped.
+    value-units per bucket, 6-decimal. Series with a single bucket (or
+    whose rows all share one bucket) have no pairwise slope and are
+    dropped. q181's DuckDB oracle (a ``b.x > a.x`` pair join) is the
+    spec.
 
-    ``engine`` picks where the O(buckets²) pair fan-out runs; both
-    produce IDENTICAL rows (parity-pinned by test):
+    Scale shape: ONE scan, one series-keyed exchange at bucket scale
+    (bounded by time-range / bucket_ms, e.g. 744 buckets for a month of
+    hourly buckets); groupBy(series).applyInPandas runs the quadratic
+    pair fan-out and median in numpy inside a single task per series.
+    Per-series memory is (span/bucket_ms)²·8 bytes — ~2 MB for a month
+    of hours; for longer horizons coarsen ``bucket_ms`` (the
+    estimator's resolution knob, which is exactly what bounds the
+    quadratic). A series with more than ``max_buckets`` buckets fails
+    loudly instead of heading for an executor OOM.
 
-    * ``'arrow'`` (default) — groupBy(series).applyInPandas, pairs and
-      median in numpy. Same shuffle as the collect_list path (bucket
-      rows keyed by series), but the quadratic inner loop is vectorized
-      C instead of interpreted HOF lambda evaluation — measured ~40×
-      on the month-of-hours bench shape. Slopes are the same
-      integer-ratio float64 divisions, np.sort orders doubles exactly
-      like array_sort (NaN/NULL last), and the median interpolation and
-      6-decimal canonicalization replicate the JVM ops bit-for-bit.
-    * ``'hof'`` — the pure-expression spec: per-series sorted struct
-      array, pair fan-out inside transform/flatten/array_sort, no
-      Python workers. Kept as the engine for deployments without
-      Python and as the readable specification of the pair set.
+    Exactness notes:
 
-    Scale shape (both engines): ONE scan, one series-keyed exchange at
-    bucket scale (bounded by time-range / bucket_ms, e.g. 744 buckets
-    for a month of hourly buckets); the quadratic fan-out happens
-    inside a single task per series. Per-series memory is
-    (span/bucket_ms)²·8 bytes — ~2 MB for a month of hours; for longer
-    horizons coarsen ``bucket_ms`` (the estimator's resolution knob,
-    which is exactly what bounds the quadratic). Pair slopes are
-    integer-ratio doubles (micro-unit Δy over integer Δx — identical in
-    any engine); the median interpolates at most
-    lower + (upper − lower)·0.5, also pinned IEEE.
-    """
-    if engine == "arrow":
-        return _theil_sen_arrow(
-            df, series_cols, bucket_ms, value_col, ts_col, max_buckets
-        )
-    if engine != "hof":
-        raise ValueError(f"unknown theil_sen engine: {engine!r}")
-    b = df.select(
-        *series_cols,
-        F.struct(
-            F.col(ts_col).alias("ts"), _micro(value_col).alias("y")
-        ).alias("p"),
-    )
-    g = (
-        b.groupBy(*series_cols)
-        .agg(F.array_sort(F.collect_list("p")).alias("arr"))
-        .filter(F.size("arr") >= 2)
-        # x is monotone in ts (arr is ts-sorted), so at least one valid
-        # x_j > x_i pair exists iff the LAST row's bucket differs from
-        # the FIRST's — an O(1) precondition that drops a series whose
-        # rows all share one bucket (un-bucketed input would otherwise
-        # hit an empty slope set: the oracle's `b.x > a.x` pair join
-        # yields no group for it either). Deliberately pinned HERE, on
-        # the cheap `arr` column: a filter on the O(B²) slope array
-        # downstream gets predicate-pushed below the projection and
-        # re-evaluates the whole pair fan-out per row (measured ~100×
-        # on q181 before this was moved).
-        .filter(
-            F.element_at(F.col("arr"), -1)["ts"]
-            - F.element_at(F.col("arr"), 1)["ts"]
-            >= F.lit(int(bucket_ms))
-        )
-    )
-    # runtime guard, lazily in the plan (no extra job): B buckets fan
-    # out to B²/2 slopes inside ONE array value — beyond ``max_buckets``
-    # that is a multi-GB unsplittable row heading for an executor OOM,
-    # and the correct move is a coarser ``bucket_ms`` (the estimator's
-    # resolution knob), not a bigger heap. Fail loudly instead.
-    g = g.withColumn(
-        "arr",
-        F.when(F.size("arr") <= F.lit(int(max_buckets)), F.col("arr")).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("theil_sen: series has "),
-                    F.size("arr").cast("string"),
-                    F.lit(
-                        f" buckets > max_buckets={int(max_buckets)}"
-                        " — coarsen bucket_ms (pairs grow as buckets²)"
-                        " or raise max_buckets explicitly"
-                    ),
-                )
-            )
-        ),
-    )
-    t0 = F.element_at(F.col("arr"), 1)["ts"]
-
-    def x_of(e):
-        # exact integer bucket index (no float division near boundaries)
-        delta = e["ts"] - t0
-        return (delta - delta % F.lit(bucket_ms)) / F.lit(bucket_ms)
-
-    # hoist the bucket index out of the O(B²) inner lambda: one O(B)
-    # pass computes (x, y) per bucket, pairs then read it by rank
-    g = g.select(
-        *series_cols,
-        F.size("arr").alias("n"),
-        F.transform(
-            F.col("arr"),
-            lambda e: F.struct(x_of(e).alias("x"), e["y"].alias("y")),
-        ).alias("xy"),
-    )
-
-    def slopes_from(i):
-        # skip equal-x partners (two input rows landing in one bucket —
-        # un-bucketed input) instead of emitting a divide-by-zero: the
-        # pair set stays exactly the x_j > x_i triangle the oracle's
-        # `b.x > a.x` join defines, so parity holds even on malformed
-        # input
-        a = F.element_at(F.col("xy"), i)
-        return F.transform(
-            F.filter(
-                F.slice(F.col("xy"), i + 1, F.size("xy") - i),
-                lambda e: e["x"] > a["x"],
-            ),
-            lambda e: (e["y"] - a["y"]).cast("double")
-            / (e["x"] - a["x"]).cast("double"),
-        )
-
-    sp = F.array_sort(
-        F.flatten(
-            F.transform(F.sequence(F.lit(1), F.size("xy") - 1), slopes_from)
-        )
-    )
-    # sp is provably non-empty here: the span precondition above
-    # guarantees x_last > x_first, so (first, last) alone is a valid pair
-    g = g.select(*series_cols, "n", sp.alias("sp"))
-    m = F.size("sp")
-    # 1-based ranks of the middle pair, in INT arithmetic ('/' on ints
-    # is double division in Spark SQL)
-    lower = F.element_at(F.col("sp"), F.floor((m + 1) / 2).cast("int"))
-    upper = F.element_at(F.col("sp"), (F.floor(m / 2) + 1).cast("int"))
-    # quantile_cont's interpolation, pinned: lower + (upper - lower)/2
-    # (odd m: both indices land on the middle element)
-    med = lower + (upper - lower) * F.lit(0.5)
-    return g.select(
-        *series_cols,
-        F.col("n").cast("long").alias("n"),
-        m.cast("long").alias("n_pairs"),
-        _q6(med / F.lit(1_000_000.0)).alias("slope"),
-    )
-
-
-def _theil_sen_arrow(
-    df: DataFrame,
-    series_cols: list[str],
-    bucket_ms: int,
-    value_col: str,
-    ts_col: str,
-    max_buckets: int,
-) -> DataFrame:
-    """theil_sen engine='arrow' (see its docstring). Exactness notes:
-
-    - y enters as the SAME micro-unit rounding (np.floor(v*1e6+0.5) is
-      the identical IEEE op sequence as the JVM _micro), kept float64 so
-      a NULL value flows through as NaN;
+    - y enters as the standard micro-unit rounding
+      (np.floor(v*1e6+0.5), the IEEE op sequence of _micro), kept
+      float64 so a NULL value flows through as NaN;
     - the pair set is the x_j > x_i triangle over rows sorted by
-      (ts, y) — exactly the HOF path's array_sort(struct(ts, y)) order
-      (ts is unique per bucketed series, y is the tiebreak for
-      malformed input);
-    - slope division is int-difference float64 / float64 — the same op
-      the JVM evaluates; np.sort places NaN last like array_sort places
-      NULL last, so the median rank picks align, and a NaN median
-      (NULL-value series) is emitted as NULL exactly like the JVM's
-      NULL arithmetic;
-    - the median is lower + (upper − lower)·0.5 with the SAME 1-based
-      ranks, then the standard 6-decimal canonicalization applied to
-      med/1e6 in the same op order.
+      (ts, y) (ts is unique per bucketed series, y is the tiebreak for
+      malformed input), with x the exact integer bucket index — equal-x
+      partners (two rows in one bucket) are skipped, as the oracle's
+      join skips them;
+    - slopes are integer-difference float64 / float64 divisions; NaN
+      (NULL-value pairs) sorts last, and a NaN median (NULL-value
+      series) is emitted as NULL, as SQL NULL arithmetic gives;
+    - the median is lower + (upper − lower)·0.5 at the 1-based ranks
+      floor((m+1)/2) and floor(m/2)+1 (quantile_cont's interpolation),
+      then the standard 6-decimal canonicalization applied to med/1e6.
     """
     import math
 
@@ -303,17 +167,17 @@ def _theil_sen_arrow(
         i, j = i[keep], j[keep]
         ycol = pdf["__y"]
         if ycol.isna().any():
-            # NULL values present: float64 path, NaN propagates like the
-            # JVM's NULL arithmetic (converted back to NULL at the end)
+            # NULL values present: float64 path, NaN propagates like SQL
+            # NULL arithmetic (converted back to NULL at the end)
             y = ycol.to_numpy(np.float64)
             dy = y[j] - y[i]
         else:
             # exact path: int64 Δy then ONE rounding at the float cast —
-            # the JVM's (y_j - y_i).cast('double') op order
+            # the oracle's CAST(y_j - y_i AS DOUBLE) op order
             y = ycol.to_numpy(np.int64)
             dy = (y[j] - y[i]).astype(np.float64)
         sp = dy / (x[j] - x[i]).astype(np.float64)
-        sp = np.sort(sp)  # NaN (NULL-value pairs) sorts last, like array_sort
+        sp = np.sort(sp)  # NaN (NULL-value pairs) sorts last
         m = len(sp)
         lower = sp[(m + 1) // 2 - 1]
         upper = sp[m // 2]
@@ -336,7 +200,7 @@ def _theil_sen_arrow(
         *series_cols,
         F.col(ts_col).alias("__ts"),
         # float64 micro units: same floor(v*1e6+0.5) rounding as _micro,
-        # NULL kept as NaN so NULL propagation matches the JVM path
+        # NULL kept as NaN so NULL propagation matches SQL's
         (F.floor(F.col(value_col) * F.lit(1_000_000.0) + F.lit(0.5))).alias(
             "__y"
         ),

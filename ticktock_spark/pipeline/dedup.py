@@ -4,9 +4,10 @@ Scale design (the whole point at 100 TB):
 
 - exact: one hash aggregation on a content digest — shuffle carries only
   (digest, doc_id), never the text.
-- MinHash+LSH: signatures are computed scan-side (pure expressions);
-  the ONLY shuffle is on band keys, and each bucket is tiny. Candidate
-  pairs come from a self-join per bucket — never an all-pairs join.
+- MinHash+LSH: signatures are computed scan-side (Arrow-batched
+  hashlib, or JVM-native xxhash64); the ONLY shuffle is on band keys,
+  and each bucket is tiny. Candidate pairs come from block-split bucket
+  enumeration — never an all-pairs join.
 - SimHash: scan-side 32-bit signature; near-dup candidates bucket on the
   signature (or rotated halves for 1-2 bit tolerance).
 - n-gram Jaccard: exact verification join on shared shingles — used on
@@ -14,10 +15,11 @@ Scale design (the whole point at 100 TB):
 
 MinHash here uses md5-string order ("min over a hash-defined random
 permutation"): h_j(doc) = min over shingles of the j-th 8-hex-char slice
-of seeded md5 digests, compared lexicographically. This keeps the hash
-function identical and portable across engines (md5 + substr exist
-everywhere) with no bit fiddling, at ceil(num_hashes/4) digests per
-shingle.
+of the seeded digests md5('0:'||s) || md5('1:'||s) || ..., compared
+lexicographically, at ceil(num_hashes/4) digests per shingle; band b's
+key is md5('b{b}:' || concat of its r slices). md5 + substr exist in
+every engine, so q34's DuckDB oracle states the same scheme in SQL and
+is its spec.
 """
 
 from __future__ import annotations
@@ -51,47 +53,15 @@ def shingles(text: Column, k: int = 5) -> Column:
     )
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 8) -> Column:
-    """Array of lexicographic-min 32-bit (8-hex-char) hash values.
-
-    Each md5 digest yields FOUR independent 8-hex slices, so only
-    ceil(num_hashes/4) digests are computed per shingle — md5 dominates
-    the signature cost and these interpreted (CodegenFallback, no CSE)
-    expressions would otherwise re-hash every shingle once per signature
-    position. Structure: one transform materializes the concatenated
-    digests per shingle, then ONE fold keeps running minima per position,
-    slicing the digest through a bound lambda variable (never re-hashing).
-    32-bit slices keep the min-over-shingles well spread (a 16-bit slice
-    would degenerate: the min of a few thousand uniform 16-bit values is
-    nearly always ~0, and every doc would collide in LSH)."""
-    n_digests = (num_hashes + 3) // 4
-    cats = F.transform(
-        shingle_col,
-        lambda s: F.concat(
-            *[F.md5(F.concat(F.lit(f"{d}:"), s)) for d in range(n_digests)]
-        ),
-    )
-    positions = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    return F.aggregate(
-        cats,
-        F.array_repeat(F.lit("g"), num_hashes),  # "g" > any hex char
-        lambda acc, cat: F.zip_with(
-            acc,
-            F.transform(positions, lambda j: F.substring(cat, j * 8 + 1, F.lit(8))),
-            lambda a, h: F.least(a, h),
-        ),
-    )
-
-
 def minhash_signature_xxh64(shingle_col: Column, num_hashes: int = 8) -> Column:
     """Array of min-over-shingles 64-bit xxhash64 values — the JVM-native
-    scale twin of ``minhash_signature``.
+    scale twin of the md5 MinHash signature (module docstring).
 
     h_j(doc) = min over shingles of xxhash64(j, shingle): the j-th "random
     permutation" is seeded by hashing the position literal into the
-    stream. Same fold shape as the md5 spec (one pass over the shingle
-    array keeping running minima), but each hash is a single native
-    XXH64 round instead of an md5 digest + hex substring — roughly an
+    stream. One pass over the shingle array keeping running minima;
+    each hash is a single native XXH64 round instead of an md5 digest
+    + hex substring — roughly an
     order of magnitude less hash work per shingle, entirely JVM-side.
     Not portable to engines without xxhash64 (DuckDB has none), so the
     md5 scheme stays the cross-engine specification. Exact duplicates
@@ -134,10 +104,10 @@ def banded_keys_xxh64(shingle_col: Column, num_hashes: int, bands: int) -> Colum
     """Band-key array in ONE expression: the aggregate's merge lambda
     keeps the running minima (= ``minhash_signature_xxh64``) and its
     finish lambda hashes each band slice (= ``band_keys_xxh64``). The
-    signature is evaluated exactly once per row inside the fold, so —
-    unlike the two-projection md5 path — no CollapseProject exchange
-    barrier is needed between signing and banding. Equality with the
-    two-step composition is pinned by test."""
+    signature is evaluated exactly once per row inside the fold, so no
+    CollapseProject exchange barrier is needed between signing and
+    banding. Equality with the two-step composition is pinned by
+    test."""
     rows = num_hashes // bands
     positions = F.sequence(F.lit(0), F.lit(num_hashes - 1))
     return F.aggregate(
@@ -160,15 +130,6 @@ def banded_keys_xxh64(shingle_col: Column, num_hashes: int, bands: int) -> Colum
     )
 
 
-def band_keys(sig: Column, bands: int, rows: int) -> Column:
-    """LSH banding: md5 over each contiguous r-slice of the signature."""
-    keys = [
-        F.md5(F.concat(F.lit(f"b{b}:"), F.concat_ws("", F.slice(sig, b * rows + 1, rows))))
-        for b in range(bands)
-    ]
-    return F.array(*keys)
-
-
 def _banded_pandas(
     num_hashes: int,
     bands: int,
@@ -179,9 +140,9 @@ def _banded_pandas(
 ):
     """mapInPandas stage: (id, sh) or (id, norm) → (id, band, key) rows.
 
-    Bit-identical to minhash_signature + band_keys (same md5 inputs), but
-    the per-shingle hashing runs in C (hashlib) instead of the interpreted
-    expression evaluator — the signature is the md5-bound hot loop.
+    The md5 MinHash scheme of the module docstring (q34's oracle), with
+    the per-shingle hashing in C (hashlib) — the signature is the
+    md5-bound hot loop.
     With ``binary_keys``, the band key is the raw 16-byte md5 digest
     instead of its 32-char lowercase hex — the SAME value bijectively
     (unhex(hex) == digest), so grouping is collision-identical while
@@ -222,7 +183,7 @@ def _banded_pandas(
     # md5 scheme's spec) == min over their uint64 values — which lets
     # the whole chunk's minima run as ONE np.minimum.reduceat call
     # instead of an interpreted per-doc zip/min loop (r11; band keys
-    # byte-identical, pinned by the engine-parity tests). Capped so a
+    # byte-identical, pinned by the q34 oracle). Capped so a
     # pathological high-entropy corpus can't grow the cache unboundedly
     # (checked between chunks — a chunk's rows stay index-stable).
     index: dict[str, int] = {}
@@ -278,10 +239,9 @@ def _banded_pandas(
                     id_seq.iloc[lo : lo + CHUNK], col.iloc[lo : lo + CHUNK]
                 ):
                     if doc is None:
-                        # NULL text: the expression path yields NULL band
-                        # keys (md5 of NULL) which posexplode drops —
-                        # match it by emitting nothing instead of
-                        # crashing on len(None)
+                        # NULL text has no shingles and so no band
+                        # keys: emit nothing instead of crashing on
+                        # len(None)
                         continue
                     if k is not None:
                         sh = {
@@ -496,26 +456,6 @@ def exact_dedup(
     )
 
 
-def _bucket_pairs(ids: Column) -> Column:
-    """All i<j pairs from a sorted id array (LSH bucket enumeration).
-
-    Enumerating pairs from grouped bucket lists instead of a self-join
-    means ONE shuffle total and no duplicate evaluation of the (costly)
-    signature expressions on both join sides. Bucket sizes are bounded by
-    cluster size, so the transform state stays small.
-    """
-    n = F.size(ids)
-    return F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), n),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -536,18 +476,17 @@ def minhash_lsh_candidates(
     keys → ONE hash aggregation into buckets → pair enumeration.
     ``shingles_df`` (id_col, sh) lets a caller share one (ideally
     persisted) shingle computation across candidates + verification.
-    ``engine``: 'pandas' (default) hashes signatures via Arrow-batched
-    hashlib; 'sql' uses the pure-expression path (same md5 inputs, same
-    output — kept for engines without Python workers and as the
-    parity-tested specification of the hash scheme); 'xxh64' swaps the
-    md5 permutation family for JVM-native xxhash64 — a different hash
-    family, so candidate sets differ on low-jaccard junk pairs while
-    exact-duplicate recall is structurally 100% and measured true-pair
-    recall / verified output match the md5 engines (SCALE.md). It
-    removes ALL Python from the signature hot loop — on a diverse
-    (cache-hostile) corpus it measures 5.4× faster than the hashlib
-    engine — at 100 TB the scan-side hash work is the dominant dedup
-    cost and this path keeps it native with no Arrow text transfer.
+    ``engine``: 'pandas' (default) hashes the md5 scheme (module
+    docstring; q34's DuckDB oracle is its spec) via Arrow-batched
+    hashlib; 'xxh64' swaps the md5 permutation family for JVM-native
+    xxhash64 — a different hash family, so candidate sets differ on
+    low-jaccard junk pairs while exact-duplicate recall is structurally
+    100% and measured true-pair recall / verified output match the md5
+    scheme (SCALE.md). It removes ALL Python from the signature hot
+    loop — on a diverse (cache-hostile) corpus it measures 5.4× faster
+    than the hashlib engine — at 100 TB the scan-side hash work is the
+    dominant dedup cost and this path keeps it native with no Arrow
+    text transfer.
     ``bucket_cap`` bounds degenerate band-key buckets BEFORE the
     bucket collect (see ``_collect_buckets``) — the 100 TB backstop
     against viral template keys.
@@ -564,6 +503,8 @@ def minhash_lsh_candidates(
     # collision-identical, half the key bytes through the banding
     # exchange (§2.3 narrower types). Persistable band-key producers
     # (_band_keys_frame, streaming) keep the hex contract.
+    if engine not in ("pandas", "xxh64"):
+        raise ValueError(f"unknown minhash engine: {engine!r}")
     if engine == "pandas" and shingles_df is None:
         nm = spread_scan(df, par).select(
             F.col(id_col), normalize_text(F.col(text_col)).alias("norm")
@@ -580,60 +521,36 @@ def minhash_lsh_candidates(
             schema=f"{id_col} {id_type}, band int, key binary",
         )
     else:
-        # Drop NULL-text docs: shingles(NULL) is [NULL], and every
-        # null-skipping hash (md5-concat via least, xxhash64 natively)
-        # then gives ALL null docs the SAME signature — one fake bucket
-        # pairing every null doc per band. Matches the pandas engine's
-        # emit-nothing for null docs. Filter the TEXT column before the
-        # shingle projection (equivalent: normalize/substr are
-        # null-preserving, so sh=[NULL] iff text IS NULL) — filtering on
-        # element_at(sh, 1) after it re-inlines the whole shingle
-        # expression into the predicate (interpreted HOF, no CSE) and
-        # was measured at 4.8× the entire banded-keys stage at sf0.1.
+        # Drop NULL-text docs: shingles(NULL) is [NULL], and xxhash64
+        # skips nulls natively, which would give ALL null docs the SAME
+        # signature — one fake bucket pairing every null doc per band.
+        # Matches the pandas engine's emit-nothing for null docs. Filter
+        # the TEXT column before the shingle projection (equivalent:
+        # normalize/substr are null-preserving, so sh=[NULL] iff text IS
+        # NULL) — filtering on element_at(sh, 1) after it re-inlines the
+        # whole shingle expression into the predicate (interpreted HOF,
+        # no CSE) and was measured at 4.8× the entire banded-keys stage
+        # at sf0.1.
         if shingles_df is not None:
             sh = shingles_df.filter(F.element_at(F.col("sh"), 1).isNotNull())
         else:
             sh = spread_scan(
                 df.filter(F.col(text_col).isNotNull()), par
             ).select(F.col(id_col), shingles(F.col(text_col), k).alias("sh"))
-        if engine == "xxh64":
-            # signature + banding fused into one aggregate (finish
-            # lambda), so the signature can't be re-inlined per band key
-            # and no exchange barrier is needed
-            banded = sh.select(
-                id_col,
-                F.posexplode(
-                    banded_keys_xxh64(F.col("sh"), num_hashes, bands)
-                ).alias("band", "key"),
-            )
-        else:
-            # the repartition between signature and banding is a
-            # deliberate CollapseProject barrier: without it the (HOF,
-            # un-CSE'd) signature expression is inlined into every band
-            # key and evaluated `bands` times per row (SCALE.md,
-            # interpreted-HOF duplication)
-            sig = sh.repartition(par, id_col).select(
-                F.col(id_col), minhash_signature(F.col("sh"), num_hashes).alias("sig")
-            )
-            banded = sig.select(
-                id_col,
-                F.posexplode(
-                    F.transform(
-                        band_keys(F.col("sig"), bands, rows),
-                        lambda kk: F.unhex(kk),
-                    )
-                ).alias("band", "key"),
-            )
+        # signature + banding fused into one aggregate (finish lambda),
+        # so the signature can't be re-inlined per band key and no
+        # exchange barrier is needed
+        banded = sh.select(
+            id_col,
+            F.posexplode(
+                banded_keys_xxh64(F.col("sh"), num_hashes, bands)
+            ).alias("band", "key"),
+        )
     buckets = _collect_buckets(banded, id_col, bucket_cap)
-    if engine in ("pandas", "xxh64"):
-        id_type = dict(df.select(id_col).dtypes)[id_col]
-        pairs = _bucket_blocks(buckets).repartition(par).mapInPandas(
-            _pairs_pandas(), schema=f"id_a {id_type}, id_b {id_type}"
-        )
-    else:
-        pairs = buckets.select(F.explode(_bucket_pairs(F.col("ids"))).alias("p")).select(
-            "p.id_a", "p.id_b"
-        )
+    id_type = dict(df.select(id_col).dtypes)[id_col]
+    pairs = _bucket_blocks(buckets).repartition(par).mapInPandas(
+        _pairs_pandas(), schema=f"id_a {id_type}, id_b {id_type}"
+    )
     return pairs.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_bands"))
 
 
@@ -897,7 +814,7 @@ def minhash_lsh_join(
     id_a/id_b first).
 
     Same hash scheme as minhash_lsh_candidates' pandas engine (md5
-    signatures in C, bit-identical to the SQL spec twin), so a given
+    signatures in C, the scheme q34's oracle specifies), so a given
     doc pair buckets identically whether deduped within or across
     corpora. One shuffle per side into the band-key join; a viral
     boilerplate key that floods a bucket is a skewed join key, which
@@ -1302,7 +1219,8 @@ def cross_source_matrix(
     # candidates from 5k sf0.1 docs) and candidate mass — not the
     # verified output — dominates cost; engine='xxh64' +
     # bucket_cap=256 is the production shape (same tradeoff q34x/q77
-    # document; the md5 default stays the DuckDB-oracle-matched spec).
+    # document; the md5 'pandas' default is the scheme the DuckDB
+    # oracle specifies).
     cand = minhash_lsh_candidates(
         df,
         text_col=text_col,
@@ -1364,25 +1282,14 @@ def _band_keys_frame(
     num_hashes: int,
     bands: int,
     engine: str,
-    parallelism: int,
 ) -> DataFrame:
     """(id, sh) shingle frame → (id, band, key) LSH band-key rows.
 
-    ``engine='sql'`` is the md5 specification (``minhash_signature`` +
-    ``band_keys``, with the repartition CollapseProject barrier the
-    interpreted-HOF hazard requires); ``'pandas'`` the Arrow/hashlib
-    engine producing BIT-IDENTICAL md5 keys (parity-tested — freely
-    mixable with 'sql' frames); ``'xxh64'`` the fused JVM-native family
-    (``banded_keys_xxh64``). xxh64 key types differ (long vs string) —
-    never join an xxh64 frame against an md5 one."""
-    rows = num_hashes // bands
+    ``engine='pandas'`` is the Arrow/hashlib md5 scheme (hex string
+    keys, the q34 oracle's scheme); ``'xxh64'`` the fused JVM-native
+    family (``banded_keys_xxh64``). xxh64 key types differ (long vs
+    string) — never join an xxh64 frame against an md5 one."""
     sh = sh_df.filter(F.element_at(F.col("sh"), 1).isNotNull())
-    if engine == "pandas":
-        id_type = dict(sh_df.dtypes)[id_col]
-        return sh.mapInPandas(
-            _banded_pandas(num_hashes, bands, rows, id_col),
-            schema=f"{id_col} {id_type}, band int, key string",
-        )
     if engine == "xxh64":
         return sh.select(
             id_col,
@@ -1390,12 +1297,12 @@ def _band_keys_frame(
                 banded_keys_xxh64(F.col("sh"), num_hashes, bands)
             ).alias("band", "key"),
         )
-    sig = sh.repartition(parallelism, id_col).select(
-        F.col(id_col), minhash_signature(F.col("sh"), num_hashes).alias("sig")
-    )
-    return sig.select(
-        id_col,
-        F.posexplode(band_keys(F.col("sig"), bands, rows)).alias("band", "key"),
+    if engine != "pandas":
+        raise ValueError(f"unknown band-key engine: {engine!r}")
+    id_type = dict(sh_df.dtypes)[id_col]
+    return sh.mapInPandas(
+        _banded_pandas(num_hashes, bands, num_hashes // bands, id_col),
+        schema=f"{id_col} {id_type}, band int, key string",
     )
 
 
@@ -1408,7 +1315,7 @@ def tile_band_keys(
     bands: int = 4,
     window_words: int = 24,
     stride: int | None = None,
-    engine: str = "sql",
+    engine: str = "pandas",
 ) -> DataFrame:
     """(id, band, key) LSH band keys for the overlapping word-window
     TILES of every document longer than ``window_words`` words — each
@@ -1459,7 +1366,7 @@ def tile_band_keys(
         F.col(id_col), shingles(F.col("tile"), k).alias("sh")
     )
     return _band_keys_frame(
-        tile_sh, id_col, num_hashes, bands, engine, par
+        tile_sh, id_col, num_hashes, bands, engine
     ).distinct()
 
 
@@ -1472,7 +1379,7 @@ def windowed_containment_candidates(
     bands: int = 4,
     window_words: int = 24,
     stride: int | None = None,
-    engine: str = "sql",
+    engine: str = "pandas",
     shingles_df: DataFrame | None = None,
     bucket_cap: int | None = None,
 ) -> DataFrame:
@@ -1499,7 +1406,7 @@ def windowed_containment_candidates(
     the viral-template backstop (cap enforced on whole-doc key
     frequency — a hot template key is dropped from BOTH sides before
     the join). ``engine='xxh64'`` keeps all tile hashing JVM-native for
-    the 100 TB path; 'sql' is the md5 cross-engine spec the DuckDB
+    the 100 TB path; 'pandas' (default) is the md5 scheme the DuckDB
     oracle mirrors.
     """
     stride = int(stride) if stride else max(1, window_words // 2)
@@ -1510,7 +1417,7 @@ def windowed_containment_candidates(
             F.col(id_col), shingles(F.col(text_col), k).alias("sh")
         )
     doc_keys = _band_keys_frame(
-        shingles_df, id_col, num_hashes, bands, engine, par
+        shingles_df, id_col, num_hashes, bands, engine
     )
     if bucket_cap is not None:
         hot = (
@@ -1559,7 +1466,7 @@ def containment_pairs(
     windowed: bool = False,
     window_words: int = 24,
     stride: int | None = None,
-    window_engine: str = "sql",
+    window_engine: str = "pandas",
     bucket_cap: int | None = None,
 ) -> DataFrame:
     """Asymmetric CONTAINMENT detection: |A∩B| / min(|A|, |B|) >= t —

@@ -173,8 +173,8 @@ def _minhash_cte(
     src: str = "documents",
     shingle_expr: str | None = None,
 ) -> str:
-    # mirror of dedup.minhash_signature: h_j = min over shingles of the
-    # j-th 8-hex slice of md5('0:'||s) || md5('1:'||s)
+    # the md5 MinHash scheme of pipeline/dedup.py: h_j = min over
+    # shingles of the j-th 8-hex slice of md5('0:'||s) || md5('1:'||s)
     hs = ",\n             ".join(
         f"list_aggregate([substr(c, {j * 8 + 1}, 8) for c in cats], 'min') AS h{j}"
         for j in range(8)
@@ -3177,17 +3177,14 @@ def q111(spark, sf_dir):
     """,
 )
 def q112(spark, sf_dir):
-    """BPE tokenizer training (pipeline/text.py bpe_train) under the
-    PRODUCTION engine ('local': distributed vocab collapse + driver
-    incremental-pair-count merges — zero Spark jobs inside the merge
-    loop), 3 merges. The oracle unrolls the reference 'sql' loop in
-    SQL, encoding symbol sequences as '|sym||sym|' strings so a
-    non-overlapping replace reproduces the greedy fold exactly — so
-    the driver pins the production engine against the spec engine's
-    math (engine parity is additionally test-pinned at larger k)."""
-    return tx.bpe_train(
-        _table(spark, sf_dir, "documents"), num_merges=3, engine="local"
-    )
+    """BPE tokenizer training (pipeline/text.py bpe_train: distributed
+    vocab collapse + driver incremental-pair-count merges — zero Spark
+    jobs inside the merge loop), 3 merges. The oracle is the spec: it
+    unrolls the reference merge loop in SQL, encoding symbol sequences
+    as '|sym||sym|' strings so a non-overlapping replace reproduces the
+    greedy fold exactly (larger k is test-pinned against an in-test
+    reference trainer)."""
+    return tx.bpe_train(_table(spark, sf_dir, "documents"), num_merges=3)
 
 
 # Shared 3-merge BPE replay (the q112 trainer unrolled, then the merge
@@ -3252,14 +3249,11 @@ def q113(spark, sf_dir):
     """Tokenizer lifecycle closed: encode the corpus with the merge
     table bpe_train just learned (pipeline/text.py bpe_encode) — per
     doc, word count and post-merge subword count, the sequence-length
-    numbers packing/budget stages consume. Runs BOTH production
-    engines (train='local', encode='arrow' heap-driven replay) so the
-    driver pins them against the oracle's SQL replay chain; the spec
-    'sql' engines stay driver-pinned via q120, which shares this
-    oracle's CTE chain."""
+    numbers packing/budget stages consume. Trains and encodes
+    (heap-driven replay) so the oracle's SQL replay chain pins both."""
     d = _table(spark, sf_dir, "documents")
-    m = tx.bpe_train(d, num_merges=3, engine="local")
-    return tx.bpe_encode(d, m, engine="arrow")
+    m = tx.bpe_train(d, num_merges=3)
+    return tx.bpe_encode(d, m)
 
 
 @register(
@@ -3314,7 +3308,7 @@ def q127(spark, sf_dir):
     with min-id collision rule), pinning symbol order, word order, and
     every id."""
     d = _table(spark, sf_dir, "documents")
-    m = tx.bpe_train(d, num_merges=3, engine="local")
+    m = tx.bpe_train(d, num_merges=3)
     enc = tx.bpe_encode_ids(d, m)
     return enc.select(
         "doc_id", F.posexplode("token_ids").alias("pos", "token_id")
@@ -3389,7 +3383,7 @@ def q128(spark, sf_dir):
     sum in SQL. Closes the tokenizer→training-batch loop
     (pipeline/text.py pack_token_ids)."""
     d = _table(spark, sf_dir, "documents")
-    m = tx.bpe_train(d, num_merges=3, engine="local")
+    m = tx.bpe_train(d, num_merges=3)
     packed = tx.pack_token_ids(tx.bpe_encode_ids(d, m))
     return packed.select(
         "pack_group", "seq_idx",
@@ -3464,7 +3458,7 @@ def q129(spark, sf_dir):
     min/max grouping over q128's packed positions (equivalent because
     concatenated streams make every in-sequence doc span contiguous)."""
     d = _table(spark, sf_dir, "documents")
-    m = tx.bpe_train(d, num_merges=3, engine="local")
+    m = tx.bpe_train(d, num_merges=3)
     packed = tx.pack_token_ids(tx.bpe_encode_ids(d, m))
     sp = packed.select(
         "pack_group", "seq_idx", F.explode("doc_spans").alias("sp")
@@ -3690,7 +3684,7 @@ _JL_PLANE = (
 def q118(spark, sf_dir):
     """Johnson-Lindenstrauss 64→16 compression (pipeline/similarity.py
     jl_project, Achlioptas ±1 planes): 4x less embedding I/O for every
-    downstream scan. The numpy engine accumulates in SQL fold order, so
+    downstream scan. The numpy kernel accumulates in SQL fold order, so
     the exploded components compare at FULL precision — no quantization
     in this oracle (the q106 exactness bar). 16 components = 1/sqrt(16)
     scale, exact in binary."""
@@ -4190,7 +4184,7 @@ def q131(spark, sf_dir):
     hash. Decode is a broadcast vocab join + one doc-keyed shuffle (no
     map-literal, so a 32k production vocab works unchanged)."""
     d = _table(spark, sf_dir, "documents")
-    m = tx.bpe_train(d, num_merges=3, engine="local")
+    m = tx.bpe_train(d, num_merges=3)
     v = tx.bpe_vocab(d, m)
     enc = tx.bpe_encode_ids(d, m, vocab_df=v)
     return tx.bpe_decode_ids(enc, v)
@@ -5850,7 +5844,7 @@ def q169(spark, sf_dir):
     FULL document shingle sets over the unioned candidate set."""
     return dd.containment_pairs(
         _table(spark, sf_dir, "documents"), threshold=0.8,
-        windowed=True, window_words=24, stride=12, window_engine="pandas",
+        windowed=True, window_words=24, stride=12,
     )
 
 
@@ -5952,7 +5946,6 @@ def q178(spark, sf_dir):
     # both the total count and the plain-LSH semi-join below
     both = dd.containment_pairs(
         docs, threshold=0.8, windowed=True, window_words=24, stride=12,
-        window_engine="pandas",
     ).select("id_a", "id_b").persist()
     plain_cand = dd.minhash_lsh_candidates(docs).select("id_a", "id_b")
     plain = both.join(plain_cand, ["id_a", "id_b"], "left_semi")

@@ -1370,7 +1370,6 @@ def pq_encode(
     codebooks: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    engine: str = "expr",
 ) -> DataFrame:
     """Encode each UNIT-NORMALIZED vector as ``m`` small codes: per
     subspace, the codeword minimizing squared L2 distance (ties to the
@@ -1378,66 +1377,22 @@ def pq_encode(
     Output (id, codes array<int>) — at dim=64/m=4 that is 64 floats →
     4 bytes per vector, the ~64x index shrink PQ exists for.
 
-    Two engines, one scan and no shuffle either way:
-    - ``'expr'`` (default, the oracle path): the collected codebook
-      (m x k x dsub doubles — model state, not data) is embedded as
-      literal expressions; m x k fused zip_with/aggregate folds per
-      row. Array folds are interpreted (CodegenFallback), so this
-      costs ~m x k x dsub interpreted ops per row — fine for oracle
-      runs, wrong for bulk encoding (measured 0.3 ms/row at
-      m=16, k=16).
-    - ``'numpy'`` (the production path): Arrow-batched mapInPandas;
-      each batch encodes with one (batch x k) matmul per subspace —
-      dense pairwise linear algebra is exactly where the interpreted
-      folds lose (same rationale as cosine_neardup_pairs' kernel).
-      Measured 10.5x faster at m=16, k=16 (32k vectors: 0.76 s vs
-      7.97 s); argmin tie-break to the lowest code matches 'expr'
-      (numpy argmin takes the first minimum), parity-pinned by test.
-    Subvectors are materialized as columns first (the interpreted-HOF
-    no-CSE rule).
+    One scan, no shuffle: Arrow-batched mapInPandas; per batch and
+    subspace, squared distances via ||x||^2 - 2 x.C^T + ||c||^2 (one
+    batch x k matmul — dense pairwise linear algebra is exactly where
+    interpreted array folds lose) and a first-minimum argmin over the
+    code-ascending codebook (= ties to the lowest code), mapped back to
+    the code value (codes need not be dense or zero-based — bucket
+    labels work). Normalization matches _unit_vec's 1e-30 floor.
+    The codebook (m x k x dsub doubles — model state, not data) ships
+    in the task closure. q109's DuckDB oracle is the spec.
     """
-    if engine == "numpy":
-        return _pq_encode_numpy(corpus, codebooks, id_col, vec_col)
-    if engine != "expr":
-        raise ValueError(f"engine must be 'expr' or 'numpy', got {engine!r}")
-    m, dsub, cb = _pq_collect(codebooks)
-    subs = (
-        corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v0"))
-        .select(F.col(id_col), _unit_vec(F.col("_v0")).alias("_vn"))
-        .select(
-            F.col(id_col),
-            *[F.slice("_vn", j * dsub + 1, dsub).alias(f"_s{j}") for j in range(m)],
-        )
-    )
-
-    def d2(j: int, cent: list) -> Column:
-        diff = F.zip_with(F.col(f"_s{j}"), F.lit(cent), lambda a, b: (a - b) * (a - b))
-        return F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x)
-
-    codes = [
-        F.array_min(
-            F.array(*[
-                F.struct(d2(j, cent).alias("d"), F.lit(code).cast("int").alias("code"))
-                for code, cent in cb[j]
-            ])
-        )["code"]
-        for j in range(m)
-    ]
-    return subs.select(id_col, F.array(*codes).alias("codes"))
-
-
-def _pq_encode_numpy(
-    corpus: DataFrame, codebooks: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    """Arrow-batched PQ encoder: per batch and subspace, squared
-    distances via ||x||^2 - 2 x.C^T + ||c||^2 and a first-minimum
-    argmin (= ties to lowest code). Normalization matches _unit_vec's
-    1e-30 floor. The codebook ships in the task closure (model state)."""
     import numpy as np
     import pandas as pd
 
     m, dsub, cb = _pq_collect(codebooks)
     books = [np.asarray([c for _, c in cb[j]], dtype=np.float64) for j in range(m)]
+    code_ids = [np.asarray([code for code, _ in cb[j]]) for j in range(m)]
     id_type = dict(corpus.dtypes)[id_col]
 
     def enc(pdfs):
@@ -1455,7 +1410,7 @@ def _pq_encode_numpy(
                     - 2.0 * (sub @ Cj.T)
                     + (Cj * Cj).sum(axis=1)
                 )
-                cols.append(d.argmin(axis=1))
+                cols.append(code_ids[j][d.argmin(axis=1)])
             codes = np.stack(cols, axis=1).astype("int32")
             # yield bound: row-local (one codes row per input row)
             yield pd.DataFrame({id_col: pdf[id_col], "codes": list(codes)})
@@ -1525,7 +1480,6 @@ def pq_knn(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     codebooks: DataFrame | None = None,
-    engine: str = "expr",
 ) -> DataFrame:
     """Approximate top-k by PQ asymmetric distance (ADC): corpus vectors
     are replaced by their PQ codes; each query precomputes an m x k
@@ -1546,7 +1500,7 @@ def pq_knn(
     spark = corpus.sparkSession
     cbdf = codebooks if codebooks is not None else pq_codebooks(corpus, m=m, bucket_col=bucket_col, vec_col=vec_col)
     mm, dsub, cb = _pq_collect(cbdf)
-    codes = pq_encode(corpus, cbdf, id_col=id_col, vec_col=vec_col, engine=engine)
+    codes = pq_encode(corpus, cbdf, id_col=id_col, vec_col=vec_col)
 
     probes = spark.createDataFrame(
         _pq_query_rows(queries, cb, mm, dsub, query_id_col, vec_col),
@@ -1615,7 +1569,6 @@ def write_ivfpq_index(
     iters: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    engine: str = "numpy",
     train: DataFrame | None = None,
 ) -> None:
     """Materialize an IVF+PQ (IVFADC) index — the standard huge-corpus
@@ -1639,7 +1592,7 @@ def write_ivfpq_index(
         corpus, k=nlist, iters=iters, id_col=id_col, vec_col=vec_col, seed="ivfpq"
     )
     cb = pq_codebooks_kmeans(tr, m=m, k=kc, id_col=id_col, vec_col=vec_col)
-    codes = pq_encode(corpus, cb, id_col=id_col, vec_col=vec_col, engine=engine)
+    codes = pq_encode(corpus, cb, id_col=id_col, vec_col=vec_col)
     spark = corpus.sparkSession
     codes.join(assignments, id_col).write.partitionBy("bucket").mode(
         "overwrite"
@@ -1708,7 +1661,6 @@ def jl_project(
     seed: int = 11,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    engine: str = "numpy",
 ) -> DataFrame:
     """Johnson-Lindenstrauss embedding compression with deterministic
     Rademacher planes (Achlioptas 2003, "Database-friendly random
@@ -1718,47 +1670,15 @@ def jl_project(
     of the storage (64→16 dims = 4x less embedding I/O for every
     downstream scan, the cheap tier below int8 quantization).
 
-    Engines (the PQ/minhash dual-engine pattern):
-    - 'numpy' (default): Arrow-batched mapInPandas; the projection
-      accumulates SEQUENTIALLY over d (_srp_project), so sums are
-      bit-identical to a left-to-right SQL fold — the oracle needs no
-      tolerance.
-    - 'expr': pure-JVM zip_with/aggregate spec twin (no Python), same
-      fold order; parity-pinned against 'numpy'.
-
-    Planes are recomputed anywhere from (seed, b, d) md5 calls — no
-    broadcast, no driver state beyond the one-row dim probe. One scan,
-    no shuffle.
+    Arrow-batched mapInPandas; the projection accumulates SEQUENTIALLY
+    over d (_srp_project), so sums are bit-identical to q118's
+    left-to-right SQL fold — the oracle needs no tolerance. Planes are
+    recomputed anywhere from (seed, b, d) md5 calls — no broadcast, no
+    driver state. One scan, no shuffle.
     """
     import math
 
-    # driver-bound: one scalar (vector dim)
-    first = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
-    dim = first["d"] if first else 0
     scale = 1.0 / math.sqrt(out_dim)
-    if engine == "expr":
-        planes = srp_planes(out_dim, dim, seed)
-        comps = []
-        for b in range(out_dim):
-            s_arr = F.array(*[F.lit(float(v)) for v in planes[b]])
-            y = (
-                F.aggregate(
-                    F.zip_with(
-                        F.col(vec_col).cast("array<double>"),
-                        s_arr,
-                        lambda x, s: x * s,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                * F.lit(scale)
-            )
-            comps.append(y)
-        return corpus.select(
-            F.col(id_col), F.array(*comps).cast("array<double>").alias("jl")
-        )
-    if engine != "numpy":
-        raise ValueError(f"unknown engine {engine!r}")
 
     def stage(batches):
         import numpy as np

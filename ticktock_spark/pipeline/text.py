@@ -1116,22 +1116,15 @@ def winnowing_fingerprints(
     are kept. Gram hashes are the first 8 hex chars of md5 — fixed-width
     hex, so lexicographic MIN equals numeric MIN in every engine.
 
-    ``engine='pandas'`` (default): the per-gram md5 runs in C via an
-    Arrow-batched mapInPandas with a per-partition gram→hash cache —
-    the same hot-loop treatment as MinHash (measured ~20× the
-    expression path on this corpus). Normalization stays JVM-side so the
-    regex semantics can't drift. ``engine='sql'`` is the pure-expression
-    specification the oracle mirrors: transform/slice/array_min HOFs.
-    There the gram-hash array MUST be materialized behind an exchange
-    before the window-minima pass — projected in one stage, Catalyst
-    inlines the whole hash-array expression into every window lambda,
-    O(len²) md5 evaluations per document (measured as a multi-minute
-    hang on 50 docs); the repartition is the same CollapseProject
-    barrier the MinHash scan uses. Downstream overlap detection groups
+    ``engine='pandas'`` (default, the md5 scheme q94's DuckDB oracle
+    specifies): the per-gram md5 runs in C via an Arrow-batched
+    mapInPandas with a per-partition gram→hash cache — the same
+    hot-loop treatment as MinHash. Normalization stays JVM-side so the
+    regex semantics can't drift. Downstream overlap detection groups
     the (fp) column — the same bucket-join shape as LSH candidates.
     ``engine='xxh64'`` swaps the gram hash for JVM-native xxhash64
     (fp column becomes BIGINT): a different hash family selects
-    different window minima, so fp SETS differ from the md5 engines,
+    different window minima, so fp SETS differ from the md5 scheme,
     but the ≥ (w+k-1)-substring guarantee holds under any hash — pinned
     by test. The 100 TB path: all-native hashing, no Python workers,
     no Arrow text transfer.
@@ -1170,10 +1163,15 @@ def winnowing_fingerprints(
                 ).otherwise(F.array().cast("array<bigint>")),
             )
         )
+        # The gram-hash array MUST be materialized behind an exchange
+        # before the window-minima pass — projected in one stage,
+        # Catalyst inlines the whole hash-array expression into every
+        # window lambda (O(len²) hash evaluations per document); the
+        # repartition is the same CollapseProject barrier as MinHash's.
         grams = (
             df.filter(F.col(text_col).isNotNull())
             .select(F.col(id_col), hashes.alias("hs"))
-            .repartition(par)  # CollapseProject barrier, as for 'sql'
+            .repartition(par)
         )
         hs = F.col("hs")
         n_windows = F.greatest(F.size(hs) - F.lit(w - 1), F.lit(1))
@@ -1237,27 +1235,7 @@ def winnowing_fingerprints(
 
         return nm.mapInPandas(_batches, schema=f"{id_col} {id_type}, fp string")
 
-    n_grams = F.greatest(F.length(norm) - F.lit(k - 1), F.lit(1))
-    hashes = F.transform(
-        F.sequence(F.lit(1), n_grams),
-        lambda i: F.substring(
-            F.md5(F.substr(norm, i, F.lit(k))), 1, 8
-        ),
-    )
-    grams = (
-        df.filter(F.length(norm) > 0)
-        .select(F.col(id_col), hashes.alias("hs"))
-        .repartition(par)
-    )
-    hs = F.col("hs")
-    n_windows = F.greatest(F.size(hs) - F.lit(w - 1), F.lit(1))
-    minima = F.transform(
-        F.sequence(F.lit(1), n_windows),
-        lambda j: F.array_min(F.slice(hs, j, w)),
-    )
-    return grams.select(
-        F.col(id_col), F.explode(F.array_distinct(minima)).alias("fp")
-    )
+    raise ValueError(f"unknown winnowing engine: {engine!r}")
 
 
 def winnowing_overlap_pairs(
@@ -1464,7 +1442,6 @@ def bpe_train(
     num_merges: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "sql",
     min_count: int = 1,
 ) -> DataFrame:
     """Train ``num_merges`` BPE merges over the corpus: the iterated
@@ -1473,135 +1450,25 @@ def bpe_train(
     string asc) in every word greedily left-to-right, repeat. Output:
     (rank, a, b, pair, n) — the merge table a BPE tokenizer ships.
 
-    Scale shape (the HuggingFace-trainer layout, distributed): the
-    corpus collapses ONCE to (word, count) — vocab-bounded — and every
-    iteration runs on that state: one bounded pair agg (top-1 collected,
-    a 2-string driver decision) plus one expression-only merge fold per
-    word; the corpus text is never rescanned. State is persisted per
-    iteration and the previous generation unpersisted, so lineage stays
-    one fold deep.
-
-    The merge fold appends each symbol unless the running tail equals
-    ``a`` and the symbol is ``b`` — greedy left-to-right, overlapping
-    runs pair up disjointly ('aaa' + (a,a) -> [aa, a]), matching every
-    reference implementation. Guards are nested when()s because ANSI
-    mode evaluates both operands of `&` (element_at on an empty
-    accumulator would throw).
-
-    ``engine`` picks the iteration strategy; both produce IDENTICAL
-    merge tables (parity-pinned by test):
-
-    * ``'sql'`` — the expression-only loop above: one Spark job per
-      merge on the (eagerly localCheckpoint-truncated) vocab state.
-      The right choice for the handful-of-merges regime (and it is the
-      DuckDB-oracle-expressible spec); linear in k, but a production
-      32k-merge vocabulary would still launch 32k sequential Spark
-      jobs on the driver's clock.
-    * ``'local'`` — the HuggingFace-trainer layout taken to its
-      conclusion: the corpus still collapses DISTRIBUTED to the
-      vocab-bounded (word, count) table (the only part that touches
-      100 TB), that model-scale state is collected once, and all k
-      merges run driver-local with incremental pair-count maintenance
-      (only words containing the merged pair are touched per
-      iteration, via an inverted pair→words index — the classic
-      subword-trainer algorithm). Zero Spark jobs inside the loop; at
-      k=500+ this is minutes-to-seconds where 'sql' is hours.
-      ``min_count`` (local only) drops words rarer than the threshold
-      before the collect — the standard bound on driver vocab size for
-      open-web corpora.
-    """
-    if engine == "local":
-        return _bpe_train_local(df, num_merges, text_col, min_count)
-    if engine != "sql":
-        raise ValueError(f"unknown bpe_train engine: {engine!r}")
-    spark = df.sparkSession
-    toks = df.select(F.explode(tokens(F.col(text_col))).alias("w"))
-    chars = F.transform(
-        F.sequence(F.lit(1), F.length("w")), lambda i: F.col("w").substr(i, F.lit(1))
-    )
-    state = (
-        toks.groupBy("w").agg(F.count(F.lit(1)).alias("wc"))
-        .select(chars.alias("syms"), "wc")
-        .persist()
-    )
-    merges: list[tuple] = []
-    try:
-        for r in range(num_merges):
-            pair_structs = F.transform(
-                F.sequence(F.lit(1), F.size("syms") - 1),
-                lambda i: F.struct(
-                    F.element_at("syms", i.cast("int")).alias("a"),
-                    F.element_at("syms", (i + 1).cast("int")).alias("b"),
-                ),
-            )
-            # driver-bound: single top-pair row per merge step (first below)
-            top = (
-                state.filter(F.size("syms") >= 2)
-                .select(F.explode(pair_structs).alias("p"), "wc")
-                .groupBy("p.a", "p.b")
-                .agg(F.sum("wc").alias("n"))
-                .orderBy(F.col("n").desc(), "a", "b")
-                .first()
-            )
-            if top is None:
-                break
-            a, b, n = top["a"], top["b"], top["n"]
-            merges.append((r + 1, a, b, a + b, n))
-
-            def make_step(a: str, b: str):
-                def step(acc, x):
-                    tail_merge = F.concat(
-                        F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(a + b))
-                    )
-                    return F.when(F.size(acc) == 0, F.array(x)).otherwise(
-                        F.when(
-                            (F.element_at(acc, -1) == a) & (x == F.lit(b)),
-                            tail_merge,
-                        ).otherwise(F.concat(acc, F.array(x)))
-                    )
-
-                return step
-
-            step = make_step(a, b)
-
-            # localCheckpoint (eager) instead of persist: it TRUNCATES
-            # lineage, so generation i's plan is one fold over the
-            # checkpointed RDD — depth 1 every iteration. A persist
-            # chain keeps the full logical plan per generation, and the
-            # optimizer's output for this fold DOUBLES per generation
-            # (measured: 2^k growth, driver OOM near k=18 at 8g) —
-            # making the loop linear is what lets the spec engine reach
-            # the k=50 comparison point at all. State is vocab-bounded,
-            # so non-recomputable checkpoint blocks are a non-risk.
-            new_state = state.select(
-                F.aggregate(
-                    "syms", F.array().cast("array<string>"), step
-                ).alias("syms"),
-                "wc",
-            ).localCheckpoint(eager=True)
-            state.unpersist()
-            state = new_state
-    finally:
-        state.unpersist()
-    return spark.createDataFrame(
-        merges, "rank int, a string, b string, pair string, n long"
-    )
-
-
-def _bpe_train_local(
-    df: DataFrame, num_merges: int, text_col: str, min_count: int
-) -> DataFrame:
-    """bpe_train engine='local': distributed (word, count) collapse,
-    then driver-local merges with incremental pair-count updates.
-
-    Semantics are bit-identical to the 'sql' loop: pair counts are
+    Semantics (q112's DuckDB oracle is the spec): pair counts are
     ADJACENT-POSITION counts ('aaa' contributes 2 to (a,a)), the top
     pair ties by (n desc, a asc, b asc), and merges apply greedily
-    left-to-right with disjoint pairing. Per iteration only the words
-    containing the chosen pair are re-paired (inverted index), so the
-    loop is O(occurrences touched), not O(vocab) — the standard
-    subword-trainer algorithm (SentencePiece/HF train the same state
-    single-node after the distributed count)."""
+    left-to-right with disjoint pairing ('aaa' + (a,a) -> [aa, a]),
+    matching every reference implementation.
+
+    Scale shape (the HuggingFace-trainer layout): the corpus collapses
+    DISTRIBUTED to the vocab-bounded (word, count) table (the only part
+    that touches 100 TB), that model-scale state is collected once, and
+    all k merges run driver-local with incremental pair-count
+    maintenance — per iteration only the words containing the chosen
+    pair are re-paired, via an inverted pair→words index, so the loop
+    is O(occurrences touched), not O(vocab) (the standard
+    subword-trainer algorithm; SentencePiece/HF train the same state
+    single-node after the distributed count). Zero Spark jobs inside
+    the loop. ``min_count`` drops words rarer than the threshold before
+    the collect — the standard bound on driver vocab size for open-web
+    corpora.
+    """
     import heapq
 
     spark = df.sparkSession
@@ -1641,7 +1508,7 @@ def _bpe_train_local(
     # scan per merge would be quadratic-ish at 32k merges; the heap makes
     # selection O(log) amortized (stale entries are skipped on pop by
     # comparing against the live count). Ordering (-n, (a, b)) is exactly
-    # the sql engine's orderBy(n desc, a, b).first() tie-break.
+    # the (n desc, a asc, b asc) tie-break.
     heap: list = [(-n, p) for p, n in counts.items()]
     heapq.heapify(heap)
 
@@ -1702,109 +1569,25 @@ def bpe_encode(
     merges: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "sql",
 ) -> DataFrame:
     """Apply a trained merge table (bpe_train output) to the corpus:
     per word, start from characters and replay the merges in rank
     order — the other half of the tokenizer lifecycle. Output:
     (id, n_words, n_subwords) — the sequence-length accounting a
     packing/budget stage consumes (n_subwords = n_chars when no merge
-    applies).
+    applies). q113's DuckDB oracle (a '|sym||sym|' string replace per
+    merge) is the spec.
 
-    ``engine`` picks the replay strategy; both produce IDENTICAL
-    output (parity-pinned by test):
-
-    * ``'sql'`` — the '|sym||sym|' string encoding of q112's oracle:
-      each merge is ONE non-overlapping string replace, which
-      reproduces the greedy left-to-right fold, so a k-merge replay is
-      a chain of k codegen'd replace() calls per word. One corpus
-      scan, no shuffle, no Python — the right plan at the tested
-      handful of merges, and the DuckDB-expressible spec. But a real
-      tokenizer ships ~32k merges, and the chain dies long before
-      that: each replace nests one more transform() lambda, analyzer
-      resolution burns one fixed-point iteration per level, and
-      spark.sql.analyzer.maxIterations (100) aborts near k=96
-      (measured) — Janino's 64KB method limit looms right behind. So
-      this engine is capped (k > _SQL_ENGINE_MAX_MERGES raises).
-    * ``'arrow'`` — the production engine: the merge table (model
-      state, k rows) is collected once and closed over by an
-      Arrow-batched pandas UDF; each word replays merges in rank order
-      driven by a min-heap of the ranks actually PRESENT in the word
-      (pairs created by a merge push their ranks; ranks below the
-      replay cursor are skipped — exact replay-in-order semantics at
-      O(word·applied) instead of O(word·k), so a 32k-merge vocabulary
-      costs what the ~dozen merges that fire per word cost, not 32k
-      no-op passes). Word→count memoized per batch (Zipf repeats).
-      Same one-scan no-shuffle plan shape; the only Python in the
-      stage is the tokenizer-table lookup a JVM cannot express.
-    """
-    if engine == "arrow":
-        return _bpe_encode_arrow(df, merges, text_col, id_col)
-    if engine != "sql":
-        raise ValueError(f"unknown bpe_encode engine: {engine!r}")
-    # driver-bound: merge table (≤ _SQL_ENGINE_MAX_MERGES)
-    rows = merges.orderBy("rank").collect()
-    if len(rows) > _SQL_ENGINE_MAX_MERGES:
-        raise ValueError(
-            f"bpe_encode engine='sql' replays one replace() per merge and "
-            f"breaks codegen past ~{_SQL_ENGINE_MAX_MERGES} merges "
-            f"(Janino 64KB method limit); use engine='arrow' for "
-            f"{len(rows)} merges"
-        )
-    toks = (
-        df.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col), tokens(F.col(text_col)).alias("_t"))
-        .filter(F.size("_t") > 0)  # no tokens -> no accounting row
-    )
-    word_syms = F.transform(
-        F.col("_t"),
-        lambda w: F.concat(
-            F.lit("|"),
-            F.array_join(
-                F.transform(
-                    F.sequence(F.lit(1), F.length(w)),
-                    lambda i: w.substr(i, F.lit(1)),
-                ),
-                "||",
-            ),
-            F.lit("|"),
-        ),
-    )
-    enc = toks.select(F.col(id_col), word_syms.alias("_s"))
-    def _apply(pat: str, rep: str, prev: Column) -> Column:
-        return F.transform(prev, lambda s: F.replace(s, F.lit(pat), F.lit(rep)))
-
-    expr = F.col("_s")
-    for r in rows:
-        expr = _apply(f"|{r['a']}||{r['b']}|", f"|{r['a']}{r['b']}|", expr)
-    n_sub = F.aggregate(
-        F.transform(
-            expr,
-            lambda s: F.size(F.split(F.btrim(s, F.lit("|")), r"\|\|")),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    return enc.select(
-        F.col(id_col),
-        F.size("_s").alias("n_words"),
-        n_sub.cast("long").alias("n_subwords"),
-    )
-
-
-# measured guard for the sql replay chain: the ANALYZER is the binding
-# constraint, not Janino — each chained replace nests one more
-# transform() lambda and resolution burns one fixed-point iteration per
-# level, hitting spark.sql.analyzer.maxIterations (100) at k≈96
-# (measured; k=80 resolves). 64 leaves margin and is far above any
-# oracle/test usage (3-8 merges).
-_SQL_ENGINE_MAX_MERGES = 64
-
-
-def _bpe_encode_arrow(
-    df: DataFrame, merges: DataFrame, text_col: str, id_col: str
-) -> DataFrame:
-    """bpe_encode engine='arrow': heap-driven replay-in-order.
+    The merge table (model state, k rows) is collected once and closed
+    over by an Arrow-batched pandas UDF; each word replays merges in
+    rank order driven by a min-heap of the ranks actually PRESENT in
+    the word (pairs created by a merge push their ranks; ranks below
+    the replay cursor are skipped — exact replay-in-order semantics at
+    O(word·applied) instead of O(word·k), so a 32k-merge vocabulary
+    costs what the ~dozen merges that fire per word cost, not 32k
+    no-op passes). Word→count memoized per batch (Zipf repeats). One
+    scan, no shuffle; the only Python in the stage is the
+    tokenizer-table lookup a JVM cannot express.
 
     Exactness argument: sequential replay applies merge rank r iff pair
     (a_r, b_r) is adjacent somewhere in the word WHEN THE CURSOR REACHES
@@ -1815,7 +1598,8 @@ def _bpe_encode_arrow(
     > cursor are pushed and fire later, as the sequential replay would.
     Duplicate-pair merge tables (the same (a,b) at two ranks — possible
     only when a later merge recreates an earlier pair's adjacency) keep
-    a rank LIST per pair, so each rank fires independently."""
+    a rank LIST per pair, so each rank fires independently.
+    """
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -1868,9 +1652,9 @@ def _bpe_encode_arrow(
 
 def _bpe_replay_word(w: str, by_rank: dict, ranks_of: dict) -> list:
     """Heap-driven replay-in-order of a merge table over one word —
-    the shared kernel of the arrow engines (see _bpe_encode_arrow's
-    docstring for the exactness argument). Returns the final symbol
-    list."""
+    the shared kernel of bpe_encode and bpe_encode_ids (see
+    bpe_encode's docstring for the exactness argument). Returns the
+    final symbol list."""
     import heapq
 
     syms = list(w)
@@ -1955,11 +1739,10 @@ def bpe_encode_ids(
     post-merge symbol stream mapped through ``bpe_vocab``'s ids, words
     in order, symbols in order within each word.
 
-    Arrow engine only (the heap replay of ``bpe_encode``'s 'arrow'
-    path, emitting ids instead of counts — same exactness argument,
-    word→ids memoized per batch); the SQL-expressible spec lives in
-    q127's oracle, which replays the identical merge chain and id
-    assignment in DuckDB, so the driver pins this engine end-to-end.
+    The heap replay of ``bpe_encode``, emitting ids instead of counts
+    — same exactness argument, word→ids memoized per batch; the spec
+    lives in q127's oracle, which replays the identical merge chain and
+    id assignment in DuckDB, pinning this path end-to-end.
     One corpus scan, no shuffle; model state = merge table + vocab
     dict, collected once and closed over.
 

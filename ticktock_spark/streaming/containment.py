@@ -29,8 +29,8 @@ verified output matches the batch operator exactly on (arrival, corpus)
 pairs — pinned by test. Verification is the same exact
 |A∩B| / min(|A|,|B|) over full shingle sets, candidate-bounded.
 
-Same md5 hash scheme as the batch path ('sql' and 'pandas' engines are
-bit-identical, freely mixable); epoch-partitioned dynamic-overwrite
+Same md5 hash scheme as the batch path ('pandas' engine; 'xxh64' on
+both sides for the JVM-native family); epoch-partitioned dynamic-overwrite
 sink for crash-replay idempotence (the house streaming-sink
 discipline).
 """
@@ -55,7 +55,7 @@ def corpus_containment_state(
     bands: int = 4,
     window_words: int = 24,
     stride: int | None = None,
-    engine: str = "sql",
+    engine: str = "pandas",
     bucket_cap: int | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The standing corpus side, computed once per corpus version:
@@ -70,7 +70,7 @@ def corpus_containment_state(
         .repartition(par)
         .select(F.col(id_col), shingles(F.col(text_col), k).alias("sh"))
     )
-    whole = _band_keys_frame(sh, id_col, num_hashes, bands, engine, par)
+    whole = _band_keys_frame(sh, id_col, num_hashes, bands, engine)
     tiles = tile_band_keys(
         corpus, text_col=text_col, id_col=id_col, k=k,
         num_hashes=num_hashes, bands=bands,
@@ -101,7 +101,7 @@ def streaming_quote_screen(
     bands: int = 4,
     window_words: int = 24,
     stride: int | None = None,
-    engine: str = "sql",
+    engine: str = "pandas",
 ):
     """Screen every arriving document against the standing corpus for
     containment >= ``threshold`` (either direction). Emits one row per
@@ -135,7 +135,7 @@ def streaming_quote_screen(
         )
         try:
             wb = _band_keys_frame(
-                sh_b, id_col, num_hashes, bands, engine, par
+                sh_b, id_col, num_hashes, bands, engine
             ).select(F.col(id_col).alias("new_id"), "band", "key")
             tb = tile_band_keys(
                 batch, text_col=text_col, id_col=id_col, k=k,

@@ -160,12 +160,12 @@ def main() -> None:
         d = spark.read.parquet(doc_paths[tag])
         t0 = time.monotonic()
         cand = windowed_containment_candidates(
-            d, engine="pandas", window_words=24, stride=12, bucket_cap=256
+            d, window_words=24, stride=12, bucket_cap=256
         ).count()
         res[f"cand{tag}x"] = cand
         pairs = containment_pairs(
             d, threshold=0.8, windowed=True, window_words=24, stride=12,
-            window_engine="pandas", bucket_cap=256,
+            bucket_cap=256,
         ).count()
         res[f"t{tag}x"] = round(time.monotonic() - t0, 2)
         res[f"rows{tag}x"] = pairs

@@ -1,21 +1,12 @@
 """BPE production-scale stress: train at >=500 merges, encode at >=5k
-merges — the operating points the r5 verdict flagged as breaking the
-'sql' engines (one Spark job per merge in train; a k-deep codegen'd
-replace chain in encode vs Janino's 64KB method limit).
+merges — the operating points a per-merge Spark job (train) or a k-deep
+codegen'd replace chain (encode) cannot reach.
 
 Measures, on the sf0.1 documents table (local[32]):
-  * bpe_train engine='local' at k in {500, 5000} (wall; merges achieved)
-  * bpe_train engine='sql'  at k=50 (wall — extrapolates the per-merge
-    job cost the local engine removes; before r6's localCheckpoint
-    lineage truncation this engine's optimized plan DOUBLED per
-    generation and OOM'd the driver near k=18 — first measured here)
-  * bpe_encode engine='arrow' under the k=64 / k=5000 tables (wall —
-    near-flat growth expected: the heap replays only merges PRESENT in
-    each word, so cost tracks merges APPLIED, not table size)
-  * bpe_encode engine='sql' under the k=64 table (its cap — analyzer
-    maxIterations aborts the replace chain near k=96, measured) for
-    the same-table comparison
-  * arrow/sql parity recheck at k=64 (exact rows, both corpora)
+  * bpe_train at k in {500, 5000} (wall; merges achieved)
+  * bpe_encode under the k=64 / k=5000 tables (wall — near-flat growth
+    expected: the heap replays only merges PRESENT in each word, so
+    cost tracks merges APPLIED, not table size)
 
 Usage: python tools/bpe_stress.py   → one JSON line, paste into SCALE.md
 """
@@ -47,19 +38,16 @@ def main() -> None:
         print(f"{name}: {out['timings'][name]}s -> {v}", flush=True)
         return v
 
-    out["merges"]["train_sql_50"] = timed(
-        "train_sql_50", lambda: tx.bpe_train(docs, num_merges=50).count()
-    )
     out["merges"]["train_local_500"] = timed(
         "train_local_500",
-        lambda: tx.bpe_train(docs, num_merges=500, engine="local").count(),
+        lambda: tx.bpe_train(docs, num_merges=500).count(),
     )
     # the sf0.1 documents vocabulary EXHAUSTS near ~90 merges (small
     # synthetic alphabet), so the >=5k-merge operating point runs on a
     # hex-token corpus: 30k docs x 2 16-char md5-prefix words — ~60k
     # unique words over a 16-char alphabet, deep merge structure.
-    # bpe_train engine='local' is EAGER (the merge loop runs at call
-    # time), so the train calls themselves are timed.
+    # bpe_train is EAGER (the merge loop runs at call time), so the
+    # train calls themselves are timed.
     from pyspark.sql import functions as F
 
     synth = (
@@ -79,37 +67,20 @@ def main() -> None:
     synth.count()
     m5000 = timed(
         "train_local_5000_synth",
-        lambda: tx.bpe_train(synth, num_merges=5000, engine="local"),
+        lambda: tx.bpe_train(synth, num_merges=5000),
     )
     out["merges"]["train_local_5000_synth"] = m5000.persist().count()
     m64 = m5000.filter("rank <= 64").persist()
     m64.count()
 
-    out["merges"]["encode_sql_64_synth"] = timed(
-        "encode_sql_64_synth", lambda: tx.bpe_encode(synth, m64).count()
-    )
     out["merges"]["encode_arrow_64_synth"] = timed(
         "encode_arrow_64_synth",
-        lambda: tx.bpe_encode(synth, m64, engine="arrow").count(),
+        lambda: tx.bpe_encode(synth, m64).count(),
     )
     out["merges"]["encode_arrow_5000_synth"] = timed(
         "encode_arrow_5000_synth",
-        lambda: tx.bpe_encode(synth, m5000, engine="arrow").count(),
+        lambda: tx.bpe_encode(synth, m5000).count(),
     )
-
-    # parity at k=64 (inside the sql cap): exact row equality, on both
-    # the real documents table and the synth corpus
-    m_docs = tx.bpe_train(docs, num_merges=64, engine="local").persist()
-    sql_rows = sorted(map(tuple, tx.bpe_encode(docs, m_docs).collect()))
-    arw_rows = sorted(
-        map(tuple, tx.bpe_encode(docs, m_docs, engine="arrow").collect())
-    )
-    out["parity_docs"] = sql_rows == arw_rows
-    sql_rows = sorted(map(tuple, tx.bpe_encode(synth, m64).collect()))
-    arw_rows = sorted(
-        map(tuple, tx.bpe_encode(synth, m64, engine="arrow").collect())
-    )
-    out["parity_synth_64"] = sql_rows == arw_rows
     print(json.dumps(out))
 
 

@@ -1,7 +1,6 @@
 """bpe_train driver-vocabulary stress: the web-scale operating point.
 
-The r6 verdict's one unproven 100 TB claim: bpe_train engine='local'
-collects the distinct (word, count) table to the driver before the
+The r6 verdict's one unproven 100 TB claim: bpe_train collects the distinct (word, count) table to the driver before the
 merge loop (the SentencePiece/HF trainer shape). SCALE.md stopped at
 ~60k unique words; a web-crawl corpus has 10^7–10^8. This stress
 measures the driver bound directly:
@@ -64,9 +63,7 @@ def run_one(min_count: int, k: int) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     df = corpus(spark)
     t0 = time.monotonic()
-    merges = tx.bpe_train(
-        df, num_merges=k, engine="local", min_count=min_count
-    ).collect()
+    merges = tx.bpe_train(df, num_merges=k, min_count=min_count).collect()
     wall = time.monotonic() - t0
     rss_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
     print(

@@ -1,5 +1,5 @@
-"""A/B the MinHash LSH engines (pandas-hashlib md5, expression md5,
-native xxhash64) in two corpus regimes, plus ground-truth recall.
+"""A/B the MinHash LSH engines (pandas-hashlib md5, native xxhash64)
+in two corpus regimes, plus ground-truth recall.
 
 Regimes:
   hex   80k unique-hex docs — cache-hostile (huge shingle vocabulary,
@@ -29,7 +29,7 @@ from ticktock_spark.pipeline import dedup as dd
 from ticktock_spark.session import get_spark
 
 SCRATCH = "/root/repo/.scratch/minhash_engine_bench"
-ENGINES = ("pandas", "sql", "xxh64")
+ENGINES = ("pandas", "xxh64")
 
 
 def hex_corpus(spark, n=80_000, words=20):
