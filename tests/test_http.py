@@ -271,6 +271,172 @@ def test_store_flush_persists_buffer(spark, tmp_path):
     assert store.flush() == 1
 
 
+def test_store_dt_is_utc_day_of_ts(spark):
+    """The buffer's vectorized ``dt`` equals the UTC date of ``ts`` for
+    pre-1970, day-boundary and millisecond-resolution timestamps."""
+    import datetime as _dt
+
+    from ticktock_spark.api.http import TsdbStore
+
+    day = 86_400_000
+    tss = [
+        -1, -day, -day - 1, -86_399_999, -1_234_567_891_234, 0, 1,
+        day - 1, day, day + 1, 1704067199999, 1704067200000, 1704067200001,
+        1706745600123, -62_135_596_800_000, 253_402_300_799_999,
+    ]
+    store = TsdbStore(spark)
+    store.add([{"metric": "m", "ts": t, "value": 1.0, "tags": {"h": "a"}} for t in tss])
+    got = {r["ts"]: r["dt"] for r in store.dataframe().collect()}
+    epoch = _dt.datetime(1970, 1, 1)
+    assert got == {t: (epoch + _dt.timedelta(milliseconds=t)).date() for t in tss}
+    # the same as the per-point conversion, where it is defined
+    for t in tss[:-2]:
+        assert got[t] == _dt.datetime.utcfromtimestamp(t / 1000).date(), t
+
+
+def test_store_last_wins_nan_inf_and_buffer_len(spark, tmp_path):
+    """An overwrite of a buffered point wins by ``seq`` before and after a
+    flush; NaN and +-Inf come back as themselves (not NULL); ``len()`` of
+    the buffer is the buffered row count, and a flush drains exactly the
+    rows it wrote."""
+    import math
+
+    from ticktock_spark.api.http import TsdbStore
+    from ticktock_spark.operators.dedup import dedup_last_wins
+
+    T = 1704067200000
+    store = TsdbStore(spark, table_path=str(tmp_path / "dps"))
+    assert len(store._buffer) == 0
+    store.add(
+        [
+            {"metric": "m", "ts": T, "value": 1.0, "tags": {"h": "a", "dc": "x"}},
+            {"metric": "m", "ts": T + 1, "value": float("nan"), "tags": {"h": "a", "dc": "x"}},
+            {"metric": "m", "ts": T + 2, "value": float("inf"), "tags": {"h": "a", "dc": "x"}},
+            {"metric": "m", "ts": T + 3, "value": float("-inf"), "tags": {"h": "a", "dc": "x"}},
+        ]
+    )
+    # the same series with its tags in the other order overwrites ts=T
+    store.add([{"metric": "m", "ts": T, "value": 2.0, "tags": {"dc": "x", "h": "a"}}])
+    assert len(store._buffer) == 5
+
+    def check():
+        got = {
+            r["ts"]: r["value"]
+            for r in dedup_last_wins(store.dataframe(), ["metric"]).collect()
+        }
+        assert got[T] == 2.0
+        assert math.isnan(got[T + 1])
+        assert got[T + 2] == math.inf and got[T + 3] == -math.inf
+
+    check()
+    assert [r["seq"] for r in store.dataframe().orderBy("seq").collect()] == [1, 2, 3, 4, 5]
+    assert store.flush() == 5
+    assert len(store._buffer) == 0
+    check()
+    store.add([{"metric": "m", "ts": T, "value": 3.0, "tags": {"h": "a", "dc": "x"}}])
+    assert len(store._buffer) == 1
+    got = dedup_last_wins(store.dataframe(), ["metric"]).filter(f"ts = {T}").collect()
+    assert [(r["value"], r["seq"]) for r in got] == [(3.0, 6)]
+
+
+def test_store_concurrent_adds_keep_columns_aligned():
+    """More writer threads than cores, with a tiny switch interval: every
+    buffered row's columns still belong to one point, seqs are 1..n, and
+    each writer's points keep their order (a batch appends its columns
+    under the store lock as one step)."""
+    import sys
+    import threading
+
+    from ticktock_spark.api.http import TsdbStore
+
+    T, n_threads, n_batches, per = 1704067200000, 12, 40, 10
+    store = TsdbStore(None)
+
+    def worker(w):
+        for i in range(n_batches):
+            store.add([
+                {"metric": f"m{w}", "ts": T + i * per + j,
+                 "value": float(w * 10_000 + i * per + j), "tags": {"w": str(w)}}
+                for j in range(per)
+            ])
+
+    threads = [threading.Thread(target=worker, args=(w,)) for w in range(n_threads)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    metric, ts, value, tags, seq = store._buffer.snapshot()
+    n = n_threads * n_batches * per
+    assert len(store._buffer) == n and store._seq == n
+    assert sorted(seq) == list(range(1, n + 1))
+    last = {}
+    for m, t, v, tg, s in zip(metric, ts, value, tags, seq):
+        w = int(tg["w"])
+        assert m == f"m{w}" and v == float(w * 10_000 + t - T)
+        prev_t, prev_s = last.get(w, (-1, 0))
+        assert prev_t < t and prev_s < s
+        last[w] = (t, s)
+    assert len(store._series_buf) == n_threads
+
+
+def test_put_unrepresentable_timestamp_is_400_and_buffers_nothing(spark):
+    """A batch whose later point has a timestamp no ``dt`` can hold is
+    refused whole: HTTP 400 with an empty body, nothing buffered, and the
+    ingest ``seq`` unchanged (no partial write of the earlier points)."""
+    import urllib.error
+
+    srv = TsdbHttpServer(spark).start()
+    try:
+        assert _post(srv, "/api/put", "put m 1700000000 0 host=a")["success"] == 1
+        n0, seq0 = len(srv.store._buffer), srv.store._seq
+        bodies = [
+            ("/api/put", "put m 1700000000 1 host=a\nput m -99999999999 2 host=a"),
+            ("/api/put", json.dumps([
+                {"metric": "m", "timestamp": 1700000000, "value": 1, "tags": {"host": "a"}},
+                {"metric": "m", "timestamp": -99999999999, "value": 2, "tags": {"host": "a"}},
+            ])),
+            ("/api/write", "m,host=a value=1 1700000000000000000\nm,host=a value=2 -99999999999"),
+        ]
+        for path, body in bodies:
+            with pytest.raises(urllib.error.HTTPError) as ei:
+                _post(srv, path, body)
+            assert ei.value.code == 400 and ei.value.read() == b""
+            assert (len(srv.store._buffer), srv.store._seq) == (n0, seq0)
+        assert _post(srv, "/api/put", "put m 1700000060 3 host=a")["success"] == 1
+        assert srv.store._seq == seq0 + 1
+    finally:
+        srv.stop()
+
+
+def test_keepalive_replies_leave_without_delay(server):
+    """Each reply leaves at once: 20 sequential keep-alive /api/version
+    requests on one connection take a median well under the ~40 ms a
+    delayed ACK adds when the body waits behind the headers."""
+    import http.client
+    import statistics
+    import time
+
+    conn = http.client.HTTPConnection("127.0.0.1", server.port)
+    times = []
+    try:
+        for _ in range(20):
+            t0 = time.perf_counter()
+            conn.request("GET", "/api/version")
+            r = conn.getresponse()
+            r.read()
+            times.append((time.perf_counter() - t0) * 1000.0)
+            assert r.status == 200
+    finally:
+        conn.close()
+    assert statistics.median(times) < 10.0, times
+
+
 def test_http_full_lifecycle(spark, tmp_path):
     """Day-in-the-life composition on one table_path-backed store: HTTP
     puts (with a duplicate timestamp) → flush to the dt-partitioned table

@@ -278,6 +278,54 @@ def test_rollup_raw_fallback_splice(spark):
     assert math.isclose(spliced[0].dps[48 * H], stale[0].dps[48 * H])
 
 
+def test_rollups_match_two_scan_build(spark):
+    """materialize_rollups carries each series' tag map through the hourly
+    and the daily aggregation. Its tables equal the former build, a rollup
+    joined to a separately scanned series dimension, on multi-tag series
+    whose tag maps arrive with different key orders; neither plan joins."""
+    from ticktock_spark.operators.rollup import build_rollup, rollup_daily_from_hourly
+    from ticktock_spark.plans.planner import SERIES_KEY, canonical_series_key
+
+    orders = [
+        lambda h: {"host": h, "dc": "east", "rack": "r1"},
+        lambda h: {"rack": "r1", "host": h, "dc": "east"},
+        lambda h: {"dc": "east", "rack": "r1", "host": h},
+    ]
+    rows = []
+    seq = 0
+    for i in range(3 * 24 * 4):  # 15-minute points over three days
+        for j, host in enumerate(("a", "b", "c")):
+            tags = orders[(i + j) % 3](host)
+            rows.append(("m", i * 900_000, ((i * 7919 + j * 104729) % 1000) / 7.0, tags, seq))
+            seq += 1
+        rows.append(("n", i * 900_000, i / 3.0, {"host": "a"}, seq))
+        seq += 1
+    df = spark.createDataFrame(
+        rows, "metric string, ts long, value double, tags map<string,string>, seq long"
+    )
+    ctx = TsdbContext(df)
+    ctx.materialize_rollups()
+
+    keys = ["metric", SERIES_KEY]
+    base = df.withColumn(SERIES_KEY, canonical_series_key(F.col("tags")))
+    dim = base.groupBy(*keys).agg(F.first("tags").alias("tags"))
+    old_1h = build_rollup(base, keys, H).join(dim, keys)
+    old_1d = rollup_daily_from_hourly(old_1h, keys).join(dim, keys)
+
+    for new, old in ((ctx.rollup_1h, old_1h), (ctx.rollup_1d, old_1d)):
+        assert new.columns == old.columns
+        assert "Join" not in new._jdf.queryExecution().optimizedPlan().toString()
+        got = {(r["metric"], r[SERIES_KEY], r["bucket_ts"]): r for r in new.collect()}
+        want = {(r["metric"], r[SERIES_KEY], r["bucket_ts"]): r for r in old.collect()}
+        assert got.keys() == want.keys() and len(got) > 0
+        for k, w in want.items():
+            g = got[k]
+            assert (g["cnt"], g["min"], g["max"]) == (w["cnt"], w["min"], w["max"]), k
+            assert math.isclose(g["sum"], w["sum"], rel_tol=1e-12), k
+            assert g["tags"] == w["tags"], k
+    assert ctx.rollup_1d.count() == 4 * 3  # 4 series x 3 days
+
+
 # --- persisted rollup table: plan-level routing guarantees ---------------
 
 def _fmt_plan(df) -> str:

@@ -8,6 +8,7 @@ import math
 
 from hypothesis import given, settings, strategies as st
 
+from ticktock_spark.sources import parsers
 from ticktock_spark.sources.parsers import (
     parse_influx_line,
     parse_put_line,
@@ -89,6 +90,62 @@ def test_influx_line_roundtrip(measurement, tags, fields, ts_ms):
         assert math.isclose(d["value"], fval, rel_tol=1e-6, abs_tol=1e-6)
         for k, v in tags.items():
             assert d["tags"][k] == v
+
+
+# influx line text: separators, escapes and field-value characters
+_LINE_CHARS = "ab=, iuT.9-\"#"
+NO_ESC_TEXT = st.text(alphabet=_LINE_CHARS, max_size=30)
+ESC_TEXT = st.builds(
+    lambda a, b: a + "\\" + b, NO_ESC_TEXT, st.text(alphabet=_LINE_CHARS + "\\", max_size=30)
+)
+
+
+def _state_machine_partition(s: str, sep: str) -> tuple[str, str]:
+    parts = parsers._split_escaped(s, sep)
+    return parts[0], sep.join(parts[1:])
+
+
+def _state_machine_unescape(s: str) -> str:
+    return s.replace("\\,", ",").replace("\\=", "=").replace("\\ ", " ")
+
+
+@given(s=st.one_of(NO_ESC_TEXT, ESC_TEXT), sep=st.sampled_from([" ", ",", "="]))
+@settings(max_examples=400)
+def test_escape_shortcut_matches_state_machine(s, sep):
+    """Without a backslash the escape helpers take str.split /
+    str.partition / identity; on strings with and without one they equal
+    the escape state machine."""
+    assert parsers._split_unescaped(s, sep) == parsers._split_escaped(s, sep)
+    assert parsers._partition_unescaped(s, sep) == _state_machine_partition(s, sep)
+    assert parsers._unescape(s) == _state_machine_unescape(s)
+
+
+@given(
+    head=st.one_of(NO_ESC_TEXT, ESC_TEXT),
+    fields=st.one_of(NO_ESC_TEXT, ESC_TEXT),
+    ts=st.sampled_from(["", " 1700000000000000000", " 1700000000"]),
+)
+@settings(max_examples=400)
+def test_influx_line_shortcut_matches_state_machine(head, fields, ts):
+    """Whole lines parse the same with the shortcut as with the state
+    machine alone."""
+    from unittest import mock
+
+    def outcome(line):
+        try:
+            return parse_influx_line(line)
+        except ValueError as e:  # an unparseable timestamp, on both paths
+            return repr(e)
+
+    line = f"{head} {fields}{ts}"
+    with mock.patch.multiple(
+        parsers,
+        _split_unescaped=parsers._split_escaped,
+        _partition_unescaped=_state_machine_partition,
+        _unescape=_state_machine_unescape,
+    ):
+        want = outcome(line)
+    assert outcome(line) == want
 
 
 def _r6_reference(sorted_vals: list[float], quantile: float) -> float:

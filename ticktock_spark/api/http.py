@@ -18,19 +18,25 @@ the server thread only shapes JSON (same thread-carries-query model as
 the reference's listener/responder, with Spark replacing the per-series
 work).
 
-Writes append to an in-driver buffer that is unioned with the base
-DataFrame (and can be checkpointed to parquet); production ingest is the
-Structured Streaming path in streaming/ingest.py.
+Writes append to an in-driver, column-wise buffer (``TsdbStore``): a
+put batch is parsed to dicts, checked whole, and appended to per-column
+lists. Each query or flush hands a snapshot of the buffer to Spark as one
+Arrow table, unioned with the base DataFrame (``flush`` appends it to the
+parquet table). Production ingest is the Structured Streaming path in
+streaming/ingest.py.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import re as _re
 import threading
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 
 from ticktock_spark import __version__
@@ -66,8 +72,65 @@ FILTER_DESCRIPTIONS = {
 }
 
 
+# the epoch-ms range whose UTC day a `dt` (date) can hold: years 1..9999
+_MIN_TS_MS = -62_135_596_800_000
+_MAX_TS_MS = 253_402_300_799_999
+_DAY_MS = 86_400_000
+_TAGS_TYPE = pa.map_(pa.string(), pa.string())
+
+
+class _ColumnBuffer:
+    """The write buffer: one list per column, in ingest order; ``len()``
+    is the number of buffered points."""
+
+    __slots__ = ("metric", "ts", "value", "tags", "seq")
+
+    def __init__(self):
+        self.metric, self.ts, self.value, self.tags, self.seq = [], [], [], [], []
+
+    def __len__(self) -> int:
+        return len(self.seq)
+
+    def _columns(self) -> tuple[list, ...]:
+        return (self.metric, self.ts, self.value, self.tags, self.seq)
+
+    def snapshot(self) -> tuple[list, ...]:
+        return tuple(c[:] for c in self._columns())
+
+    def drop_head(self, n: int) -> None:
+        for c in self._columns():
+            del c[:n]
+
+
+def _arrow_table(metric, ts, value, tags, seq) -> pa.Table:
+    """Buffered columns → one Arrow table in DATAPOINTS_SCHEMA's column
+    order, with ``dt`` (the UTC day of ``ts``) computed vectorized."""
+    ts_arr = pa.array(ts, pa.int64())
+    days = np.floor_divide(ts_arr.to_numpy(), _DAY_MS).astype(np.int32)
+    # the tag maps go in flattened (offsets, keys, values): converting
+    # the dicts one by one costs ~20x more
+    offsets = pa.array([0, *itertools.accumulate(map(len, tags))], pa.int32())
+    keys = pa.array([k for t in tags for k in t], pa.string())
+    vals = pa.array([v for t in tags for v in t.values()], pa.string())
+    return pa.table(
+        {
+            "metric": pa.array(metric, pa.string()),
+            "ts": ts_arr,
+            "value": pa.array(value, pa.float64()),
+            "tags": pa.MapArray.from_arrays(offsets, keys, vals, type=_TAGS_TYPE),
+            "seq": pa.array(seq, pa.int64()),
+            "dt": pa.array(days, pa.date32()),
+        }
+    )
+
+
 class TsdbStore:
     """Base DataFrame + in-driver write buffer.
+
+    Puts append to a column-wise buffer (one Python list per column, the
+    analogue of the reference's per-series page buffers, `include/ts.h`);
+    a query or a flush turns a snapshot of it into one Arrow table and one
+    DataFrame, unioned with ``base``.
 
     ``table_path`` (optional) points at the dt-partitioned parquet table
     backing ``base`` so admin compaction can rewrite partitions in place.
@@ -88,7 +151,7 @@ class TsdbStore:
         self.max_response_bytes = max_response_bytes
         self.rollup_1h: DataFrame | None = None
         self.rollup_1d: DataFrame | None = None
-        self._buffer: list[Row] = []
+        self._buffer = _ColumnBuffer()
         # seed the ingest sequence past any seq already persisted in base:
         # a restarted store starting at 0 would hand NEW puts lower seqs
         # than old flushed rows, silently inverting last-write-wins dedup
@@ -194,40 +257,51 @@ class TsdbStore:
         return dps
 
     def add(self, dps: list[dict]) -> int:
-        import datetime as _dt
-
+        """Buffer a batch of datapoints, all or nothing: the whole batch is
+        checked before any point is appended, so a bad point leaves the
+        buffer and the ingest ``seq`` as they were. A timestamp whose day
+        falls outside years 1..9999 (no ``dt`` can hold it) raises
+        ValueError."""
+        metric = [dp["metric"] for dp in dps]
+        ts = [dp["ts"] for dp in dps]
+        value = [dp["value"] for dp in dps]
+        tags = [dp.get("tags") or {} for dp in dps]
+        if ts and (min(ts) < _MIN_TS_MS or max(ts) > _MAX_TS_MS):
+            raise ValueError("timestamp outside the representable date range")
+        # one series key per distinct (metric, tag items) of the batch: a
+        # batch repeats its few series many times over
+        series = {}
+        for m, t in zip(metric, tags):
+            series.setdefault((m, *t.items()), (m, t))
         with self._lock:
-            for dp in dps:
-                self._seq += 1
-                tags = dp.get("tags") or {}
-                skey = series_key(dp["metric"], tags)
+            for m, t in series.values():
+                skey = series_key(m, t)
                 if skey not in self._series_buf:
                     self._series_buf[skey] = Row(
-                        metric=dp["metric"],
-                        tags=tags,
-                        skey=skey,
-                        tsuid=series_tsuid(skey),
+                        metric=m, tags=t, skey=skey, tsuid=series_tsuid(skey)
                     )
-                self._buffer.append(
-                    Row(
-                        metric=dp["metric"],
-                        ts=dp["ts"],
-                        value=dp["value"],
-                        tags=tags,
-                        seq=self._seq,
-                        dt=_dt.datetime.utcfromtimestamp(dp["ts"] / 1000).date(),
-                    )
-                )
+            buf = self._buffer
+            first = self._seq + 1
+            self._seq += len(dps)
+            buf.metric += metric
+            buf.ts += ts
+            buf.value += value
+            buf.tags += tags
+            buf.seq += range(first, self._seq + 1)
         return len(dps)
+
+    def _frame(self, cols: tuple[list, ...]) -> DataFrame:
+        """One buffer snapshot as a DataFrame, through one Arrow table."""
+        return self.spark.createDataFrame(_arrow_table(*cols), DATAPOINTS_SCHEMA)
 
     def dataframe(self) -> DataFrame:
         with self._lock:
-            buf = list(self._buffer)
+            cols = self._buffer.snapshot()
         parts = []
         if self.base is not None:
             parts.append(self.base)
-        if buf:
-            parts.append(self.spark.createDataFrame(buf, DATAPOINTS_SCHEMA))
+        if cols[0]:
+            parts.append(self._frame(cols))
         if not parts:
             return self.spark.createDataFrame([], DATAPOINTS_SCHEMA)
         df = parts[0]
@@ -287,11 +361,12 @@ class TsdbStore:
         # rows that raced in between them
         with self._flush_lock:
             with self._lock:
-                buf = list(self._buffer)
-            if not buf:
+                cols = self._buffer.snapshot()
+            n = len(cols[0])
+            if not n:
                 return 0
             (
-                self.spark.createDataFrame(buf, DATAPOINTS_SCHEMA)
+                self._frame(cols)
                 .write.mode("append")
                 .partitionBy("dt")
                 .parquet(self.table_path)
@@ -302,13 +377,13 @@ class TsdbStore:
             self.base = self.spark.read.parquet(self.table_path)
             with self._lock:
                 # only drop what was written; puts that raced in stay buffered
-                self._buffer = self._buffer[len(buf):]
+                self._buffer.drop_head(n)
             # the cached base-series dim predates the flushed rows; the
             # buffer overlay still covers those series, so rebuild lazily
             if self._series_base is not None:
                 self._series_base.unpersist()
                 self._series_base = None
-            return len(buf)
+            return n
 
     def purge(self, keep_days: int, today=None) -> list:
         """Retention purge over the backing table with the store's own
@@ -359,6 +434,9 @@ class _BadRequest(Exception):
 class _Handler(BaseHTTPRequestHandler):
     store: TsdbStore = None  # set by server factory
     protocol_version = "HTTP/1.1"
+    # TCP_NODELAY: a reply leaves as headers then body; with Nagle on, the
+    # body waits for the client's delayed ACK of the headers (~40 ms)
+    disable_nagle_algorithm = True
 
     def log_message(self, fmt, *args):  # quiet
         pass
@@ -489,9 +567,7 @@ class _Handler(BaseHTTPRequestHandler):
                     dps = parse_put_json(text)
                 else:
                     dps = [d for d in (parse_put_line(l) for l in text.splitlines()) if d]
-                n = self.store.add(dps)
-                self.store.note_ingest(n)
-                self._send(200, {"success": n, "failed": 0})
+                self._ingest(dps)
             elif route == "/api/write":
                 import time as _t
 
@@ -502,9 +578,7 @@ class _Handler(BaseHTTPRequestHandler):
                         if dp["ts"] is None:
                             dp["ts"] = now
                         dps.append(dp)
-                n = self.store.add(dps)
-                self.store.note_ingest(n)
-                self._send(200, {"success": n, "failed": 0})
+                self._ingest(dps)
             elif route == "/api/query":
                 import time as _t
 
@@ -558,6 +632,14 @@ class _Handler(BaseHTTPRequestHandler):
             self._send(503, b"", content_type="text/plain")
         except Exception as e:  # noqa: BLE001
             self._send(500, {"error": str(e)})
+
+    def _ingest(self, dps: list[dict]) -> None:
+        try:
+            n = self.store.add(dps)
+        except ValueError as e:  # a point no `dt` can hold: nothing buffered
+            raise _BadRequest(str(e)) from e
+        self.store.note_ingest(n)
+        self._send(200, {"success": n, "failed": 0})
 
     def _admin(self, params) -> None:
         """POST /api/admin?cmd=... (src/admin.cpp:52-156). Implemented:

@@ -39,7 +39,6 @@ from ticktock_spark.operators.rollup import (
     HOUR_MS,
     DAY_MS,
     ROLLUP_FUNCS,
-    build_rollup,
     snap_interval,
 )
 from ticktock_spark.operators.topn import top_bottom_n
@@ -55,6 +54,26 @@ def canonical_series_key(tags_col: F.Column) -> F.Column:
     return F.concat_ws(
         ",", F.transform(entries, lambda e: F.concat_ws("=", e["key"], e["value"]))
     )
+
+
+def _series_rollup(
+    df: DataFrame, ts_col: str, unit: int, *aggs: F.Column
+) -> DataFrame:
+    """(metric, series, bucket_ts) rollup rows of ``df`` at ``unit`` with
+    the series' tag map carried through the same aggregation: the series
+    key is DERIVED from the tag map (canonical_series_key), so every row
+    of a (metric, series) group holds an equal map and first() is exact.
+    Columns: metric, SERIES_KEY, bucket_ts, *aggs, tags."""
+    return df.groupBy(
+        "metric", SERIES_KEY, bucket_expr(ts_col, unit).alias("bucket_ts")
+    ).agg(*aggs, F.first("tags").alias("tags"))
+
+
+def _point_aggs() -> list[F.Column]:
+    """The rollup aggregates of raw points (cf. operators.rollup.build_rollup)."""
+    v = F.col("value")
+    return [F.count(v).alias("cnt"), F.min(v).alias("min"),
+            F.max(v).alias("max"), F.sum(v).alias("sum")]
 
 
 @dataclass
@@ -87,18 +106,14 @@ class TsdbContext:
     # -- rollup maintenance (batch recompute; streaming variant in
     #    streaming/rollup.py) --
     def materialize_rollups(self) -> None:
+        # one scan of the base: the tag map rides inside both aggregations
+        # (see _series_rollup) instead of a series-dim scan joined onto each
         base = self.datapoints.withColumn(SERIES_KEY, canonical_series_key(F.col("tags")))
-        # NB: map columns can't go through distinct(); groupBy+first gives
-        # the same series dimension table
-        series_dim = base.groupBy("metric", SERIES_KEY).agg(F.first("tags").alias("tags"))
-        r1h = build_rollup(base, ["metric", SERIES_KEY], HOUR_MS).join(
-            series_dim, ["metric", SERIES_KEY]
-        )
-        self.rollup_1h = r1h
-        from ticktock_spark.operators.rollup import rollup_daily_from_hourly
-
-        self.rollup_1d = rollup_daily_from_hourly(r1h, ["metric", SERIES_KEY]).join(
-            series_dim, ["metric", SERIES_KEY]
+        self.rollup_1h = _series_rollup(base, "ts", HOUR_MS, *_point_aggs())
+        self.rollup_1d = _series_rollup(
+            self.rollup_1h, "bucket_ts", DAY_MS,
+            F.sum("cnt").alias("cnt"), F.min("min").alias("min"),
+            F.max("max").alias("max"), F.sum("sum").alias("sum"),
         )
 
     # -- planning --
@@ -186,23 +201,7 @@ class TsdbContext:
         raw = raw.withColumn(SERIES_KEY, canonical_series_key(F.col("tags")))
         if "seq" in raw.columns:
             raw = dedup_last_wins(raw, ["metric", SERIES_KEY], seq_col="seq")
-        # tags ride inside the SAME aggregation instead of a separate
-        # series-dim scan + join: the series key is DERIVED from the tag
-        # map (canonical_series_key), so every row of a (metric, series)
-        # group carries the identical map and first() is exact — one scan
-        # of the invalidated partitions, not two
-        from ticktock_spark.operators.downsample import bucket_expr
-
-        v = F.col("value")
-        re_agg = raw.groupBy(
-            "metric", SERIES_KEY, bucket_expr("ts", unit).alias("bucket_ts")
-        ).agg(
-            F.count(v).alias("cnt"),
-            F.min(v).alias("min"),
-            F.max(v).alias("max"),
-            F.sum(v).alias("sum"),
-            F.first("tags").alias("tags"),
-        )
+        re_agg = _series_rollup(raw, "ts", unit, *_point_aggs())
         cols = ["metric", SERIES_KEY, "bucket_ts", "cnt", "min", "max", "sum", "tags"]
         return valid.select(*cols).unionByName(re_agg.select(*cols))
 

@@ -175,7 +175,8 @@ def json_lines_to_datapoints(lines: DataFrame, line_col: str = "value") -> DataF
 # InfluxDB line protocol
 # ---------------------------------------------------------------------------
 
-def _split_unescaped(s: str, sep: str) -> list[str]:
+def _split_escaped(s: str, sep: str) -> list[str]:
+    """Split on every ``sep`` that no backslash escapes (escapes kept)."""
     out, cur, esc = [], [], False
     for ch in s:
         if esc:
@@ -193,12 +194,27 @@ def _split_unescaped(s: str, sep: str) -> list[str]:
     return out
 
 
+# the escape-aware helpers: a string without a backslash has no escapes,
+# so the state machine reduces to str.split / str.partition / identity
+
+
+def _split_unescaped(s: str, sep: str) -> list[str]:
+    if "\\" not in s:
+        return s.split(sep)
+    return _split_escaped(s, sep)
+
+
 def _unescape(s: str) -> str:
+    if "\\" not in s:
+        return s
     return s.replace("\\,", ",").replace("\\=", "=").replace("\\ ", " ")
 
 
 def _partition_unescaped(s: str, sep: str) -> tuple[str, str]:
-    parts = _split_unescaped(s, sep)
+    if "\\" not in s:
+        head, _, tail = s.partition(sep)
+        return head, tail
+    parts = _split_escaped(s, sep)
     return parts[0], sep.join(parts[1:])
 
 
