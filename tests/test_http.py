@@ -386,9 +386,10 @@ def test_store_concurrent_adds_keep_columns_aligned():
 
 
 def test_put_unrepresentable_timestamp_is_400_and_buffers_nothing(spark):
-    """A batch whose later point has a timestamp no ``dt`` can hold is
-    refused whole: HTTP 400 with an empty body, nothing buffered, and the
-    ingest ``seq`` unchanged (no partial write of the earlier points)."""
+    """A batch whose later point has a timestamp no ``dt`` can hold, or
+    an Influx line whose timestamp is not a number, is refused whole:
+    HTTP 400 with an empty body, nothing buffered, and the ingest
+    ``seq`` unchanged (no partial write of the earlier points)."""
     import urllib.error
 
     srv = TsdbHttpServer(spark).start()
@@ -402,6 +403,9 @@ def test_put_unrepresentable_timestamp_is_400_and_buffers_nothing(spark):
                 {"metric": "m", "timestamp": -99999999999, "value": 2, "tags": {"host": "a"}},
             ])),
             ("/api/write", "m,host=a value=1 1700000000000000000\nm,host=a value=2 -99999999999"),
+            # a timestamp token that is not a number, or is inf
+            ("/api/write", "m,host=a value=1 1700000000000000000\nm value=1 abc"),
+            ("/api/write", "m value=1 inf"),
         ]
         for path, body in bodies:
             with pytest.raises(urllib.error.HTTPError) as ei:
@@ -410,6 +414,49 @@ def test_put_unrepresentable_timestamp_is_400_and_buffers_nothing(spark):
             assert (len(srv.store._buffer), srv.store._seq) == (n0, seq0)
         assert _post(srv, "/api/put", "put m 1700000060 3 host=a")["success"] == 1
         assert srv.store._seq == seq0 + 1
+    finally:
+        srv.stop()
+
+
+def test_series_with_delimiters_in_tags_stay_distinct(spark):
+    """``{a: '1,b=2'}`` and ``{a: '1', b: '2'}`` are two series: the
+    canonical series key escapes ``,``, ``=`` and ``\\``, so last-wins
+    dedup keeps both points at the same timestamp, and the per-series
+    analytics labels decode back to each series' own tags."""
+    srv = TsdbHttpServer(spark).start()
+    try:
+        body = (
+            "put m 1700000000 1 a=1,b=2\n"
+            "put m 1700000000 2 a=1 b=2\n"
+            "put m 1700000000 3 a=x\\,y\n"
+            "put m 1700000000 4 a=x\\ y=z\n"
+        )
+        assert _post(srv, "/api/put", body)["success"] == 4
+        res = _post(
+            srv,
+            "/api/query",
+            json.dumps(
+                {
+                    "start": 1699999999,
+                    "end": 1700000001,
+                    "queries": [{"metric": "m", "aggregator": "none"}],
+                }
+            ),
+        )
+        got = sorted(
+            (json.dumps(r["tags"], sort_keys=True), r["dps"]["1700000000"])
+            for r in res
+        )
+        want = [
+            ({"a": "1", "b": "2"}, 2.0),
+            ({"a": "1,b=2"}, 1.0),
+            ({"a": "x\\", "y": "z"}, 4.0),
+            ({"a": "x\\,y"}, 3.0),
+        ]
+        assert got == sorted((json.dumps(t, sort_keys=True), v) for t, v in want)
+        res = _get(srv, "/api/analytics?op=trend&m=m&by_series=true")
+        tags = sorted(json.dumps(r["tags"], sort_keys=True) for r in res)
+        assert tags == sorted(json.dumps(t, sort_keys=True) for t, _ in want)
     finally:
         srv.stop()
 

@@ -173,65 +173,57 @@ def test_minhash_null_text_expression_engines(spark):
 
 
 def test_dedup_pipeline_xxh64_matches_md5(spark):
-    """End-to-end dedup_pipeline under the xxh64 engine must produce the
-    same final clusters as the md5 engine on a corpus whose duplicate
-    pairs are unambiguous (high-Jaccard dups, low-Jaccard non-dups):
-    candidates differ only on borderline pairs, and Jaccard-verify
-    removes any engine-specific extras."""
+    """The xxh64 composition q34x benches (minhash_lsh_candidates
+    engine='xxh64' → verify_jaccard → dedup_clusters) must produce the
+    same final clusters as dedup_pipeline's md5 path on a corpus whose
+    duplicate pairs are unambiguous (high-Jaccard dups, low-Jaccard
+    non-dups): candidates differ only on borderline pairs, and
+    Jaccard-verify removes any engine-specific extras."""
+    from ticktock_spark.pipeline.cluster import dedup_clusters
+
     d = _docs(spark)
     md5 = {
         (r["doc_id"], r["cluster_id"], r["is_kept"])
         for r in dd.dedup_pipeline(d).collect()
     }
-    xxh = {
-        (r["doc_id"], r["cluster_id"], r["is_kept"])
-        for r in dd.dedup_pipeline(d, engine="xxh64").collect()
-    }
-    assert xxh == md5
+    for cap in (None, 256):
+        cand = dd.minhash_lsh_candidates(d, engine="xxh64", bucket_cap=cap)
+        ver = dd.verify_jaccard(d, cand, threshold=0.5)
+        xxh = {
+            (r["doc_id"], r["cluster_id"], r["is_canonical"])
+            for r in dedup_clusters(d, ver.select("id_a", "id_b")).collect()
+        }
+        assert xxh == md5, cap
 
 
-def test_dedup_pipeline_scale_profile(spark):
-    """profile='scale' (the blind-100 TB preset: xxh64 engine + finite
-    bucket_cap) produces the same final clusters as the oracle-exact
-    default on an unambiguous corpus; explicitly passed knobs win over
-    the profile; unknown profiles fail loudly."""
-    import pytest
+def test_engine_parameters_only_where_registry_selects_each_value():
+    """An ``engine``-style choice stays only where the alternatives
+    compute different things AND a registry query runs each one:
+    minhash_lsh_candidates (q34 md5, q99 xxh64). decode_and_featurize's
+    ``engine`` picks a decoder for the input format. Every other
+    operator has one hash family, so a new ``engine`` /
+    ``window_engine`` parameter on a public function fails here."""
+    import ast
+    import pathlib
 
-    d = _docs(spark)
-    default = {
-        (r["doc_id"], r["cluster_id"], r["is_kept"])
-        for r in dd.dedup_pipeline(d).collect()
-    }
-    scale = {
-        (r["doc_id"], r["cluster_id"], r["is_kept"])
-        for r in dd.dedup_pipeline(d, profile="scale").collect()
-    }
-    assert scale == default
-    # explicit engine overrides the profile's engine (bucket_cap still
-    # filled in): same clusters either way on this corpus
-    mixed = {
-        (r["doc_id"], r["cluster_id"], r["is_kept"])
-        for r in dd.dedup_pipeline(d, profile="scale", engine="pandas").collect()
-    }
-    assert mixed == default
-    with pytest.raises(ValueError, match="unknown dedup profile"):
-        dd.dedup_pipeline(d, profile="turbo")
+    import ticktock_spark
 
-
-def test_minhash_lsh_join_xxh64(spark):
-    """Cross-corpus LSH under xxh64: the exact-duplicate cross pair must
-    surface (structural 100% recall), unrelated docs must not."""
-    left = spark.createDataFrame(DOCS[:3], "doc_id long, text string")
-    right = spark.createDataFrame(
-        [(10 + i, t) for i, t in DOCS[2:]], "doc_id long, text string"
-    )
-    got = {
-        (r["left_id"], r["right_id"])
-        for r in dd.minhash_lsh_join(left, right, engine="xxh64").collect()
+    root = pathlib.Path(ticktock_spark.__file__).parent
+    found = set()
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if node.name.startswith("_"):
+                continue
+            a = node.args
+            for arg in a.posonlyargs + a.args + a.kwonlyargs:
+                if "engine" in arg.arg:
+                    found.add((path.stem, node.name, arg.arg))
+    assert found == {
+        ("dedup", "minhash_lsh_candidates", "engine"),
+        ("multimodal", "decode_and_featurize", "engine"),
     }
-    assert (1, 14) in got  # doc 14 is DOCS id 4's text = exact dup of 1
-    assert (3, 13) in got  # doc 13 repeats left doc 3's text verbatim
-    assert not any(r == 15 for _, r in got)  # unrelated right-side doc
 
 
 def test_minhash_finds_near_dups(spark):
@@ -1275,8 +1267,12 @@ def test_winnowing_guarantee(spark):
     ≥ w+k-1 (= 8 normalized chars for k=5, w=4) share at least one
     fingerprint; a doc of unrelated text shares none. Fingerprints are
     position-independent (same shared text at different offsets still
-    collides)."""
-    from ticktock_spark.pipeline.text import winnowing_fingerprints
+    collides), and overlap-pair detection finds exactly the overlapping
+    pair."""
+    from ticktock_spark.pipeline.text import (
+        winnowing_fingerprints,
+        winnowing_overlap_pairs,
+    )
 
     shared = "common boilerplate sentence here"
     df = spark.createDataFrame(
@@ -1298,38 +1294,9 @@ def test_winnowing_guarantee(spark):
     # density: winnowing keeps far fewer fps than grams
     n_grams_1 = len("intro words common boilerplate sentence here tail one") - 4
     assert len(fps[1]) < n_grams_1 / 2
-
-
-def test_winnowing_xxh64_guarantee(spark):
-    """The xxh64 engine selects different window minima (different hash
-    family → different fp sets than md5), but the winnowing guarantee is
-    hash-independent: docs sharing a ≥ w+k-1 substring share ≥ 1
-    fingerprint, unrelated docs share none, and overlap-pair detection
-    finds the same overlapping pair."""
-    from ticktock_spark.pipeline.text import (
-        winnowing_fingerprints,
-        winnowing_overlap_pairs,
-    )
-
-    shared = "common boilerplate sentence here"
-    df = spark.createDataFrame(
-        [
-            (1, f"intro words {shared} tail one"),
-            (2, f"{shared} completely different ending text"),
-            (3, "nothing alike in this document at all zzz qqq"),
-        ],
-        "doc_id long, text string",
-    )
-    fps = {}
-    for r in winnowing_fingerprints(df, k=5, w=4, engine="xxh64").collect():
-        fps.setdefault(r["doc_id"], set()).add(r["fp"])
-    assert isinstance(next(iter(fps[1])), int)  # BIGINT fps, not hex
-    assert fps[1] & fps[2]
-    assert not (fps[1] & fps[3])
-    assert not (fps[2] & fps[3])
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in winnowing_overlap_pairs(df, min_shared=1, engine="xxh64").collect()
+        for r in winnowing_overlap_pairs(df, min_shared=1).collect()
     }
     assert pairs == {(1, 2)}
 
@@ -2490,9 +2457,8 @@ def test_windowed_containment_catches_short_in_long(spark):
     """Planted short-in-long fixture: a 24-word quote inside a 300-word
     article. Whole-document LSH provably misses the pair (the quote
     barely moves the article's signature); windowed=True tiles the long
-    side and catches it — with BOTH band-key engines, since the
-    tile covering the quote equals the quoted doc verbatim (identical
-    signatures under any hash family)."""
+    side and catches it, since the tile covering the quote equals the
+    quoted doc verbatim (identical signatures)."""
     from ticktock_spark.pipeline.dedup import (
         containment_pairs,
         windowed_containment_candidates,
@@ -2518,11 +2484,6 @@ def test_windowed_containment_catches_short_in_long(spark):
     assert r["contained"] == "b" and r["containment"] >= 0.9
     # control doc never pairs
     assert all(3 not in p for p in pairs)
-    # the JVM-native engine recovers the same planted pair
-    cand = windowed_containment_candidates(
-        docs, window_words=24, stride=12, engine="xxh64"
-    ).collect()
-    assert (1, 2) in {(r["id_a"], r["id_b"]) for r in cand}
     # bucket_cap backstop: a cap of 0 drops every key → no candidates
     capped = windowed_containment_candidates(
         docs, window_words=24, stride=12, bucket_cap=0

@@ -508,13 +508,11 @@ def test_fake_decode_vectorized_matches_loop_spec(spark):
 
 
 def test_winnowing_null_empty_guard_matches_prefilter(spark):
-    """r11: winnowing_fingerprints drops empty-norm docs via the
-    in-binding length guard (xxh64: hs=[] -> fp NULL -> IS NOT NULL;
-    pandas: kernel-side skip) instead of a plan-level
-    filter(length(norm) > 0) that re-evaluated the normalize regex
-    chain in the Filter node. Parity vs the old pre-filter spec on
-    NULL / empty / punct-only / shorter-than-k / normal docs, both
-    engines, plus overlap_pairs end-to-end."""
+    """r11: winnowing_fingerprints drops empty-norm docs with a
+    kernel-side skip instead of a plan-level filter(length(norm) > 0)
+    that re-evaluated the normalize regex chain in the Filter node.
+    Parity vs the old pre-filter spec on NULL / empty / punct-only /
+    shorter-than-k / normal docs, plus overlap_pairs end-to-end."""
     import hashlib
 
     from ticktock_spark.pipeline import text as tx
@@ -552,42 +550,6 @@ def test_winnowing_null_empty_guard_matches_prefilter(spark):
     for r in tx.winnowing_fingerprints(df, k=k, w=w).collect():
         got.setdefault(r["doc_id"], set()).add(r["fp"])
     assert got == exp
-
-    # xxh64 engine: same doc set must survive, no NULL fp rows
-    gx = {}
-    for r in tx.winnowing_fingerprints(df, k=k, w=w, engine="xxh64").collect():
-        assert r["fp"] is not None
-        gx.setdefault(r["doc_id"], set()).add(r["fp"])
-    assert sorted(gx) == sorted(exp)
-    # and the xxh64 fp values equal the old unguarded form on the
-    # surviving docs (the guard only adds the empty branch)
-    norm = tx.normalize_text(F.col("text"))
-    old_hashes = F.flatten(
-        F.transform(
-            F.array(norm),
-            lambda nm: F.transform(
-                F.sequence(
-                    F.lit(1), F.greatest(F.length(nm) - F.lit(k - 1), F.lit(1))
-                ),
-                lambda i: F.xxhash64(nm.substr(i, F.lit(k))),
-            ),
-        )
-    )
-    old_grams = (
-        df.filter(F.length(norm) > 0)
-        .select(F.col("doc_id"), old_hashes.alias("hs"))
-    )
-    hs = F.col("hs")
-    n_windows = F.greatest(F.size(hs) - F.lit(w - 1), F.lit(1))
-    minima = F.transform(
-        F.sequence(F.lit(1), n_windows), lambda j: F.array_min(F.slice(hs, j, w))
-    )
-    ox = {}
-    for r in old_grams.select(
-        "doc_id", F.explode(F.array_distinct(minima)).alias("fp")
-    ).collect():
-        ox.setdefault(r["doc_id"], set()).add(r["fp"])
-    assert gx == ox
 
     pairs = tx.winnowing_overlap_pairs(df, min_shared=2).collect()
     assert [(r["id_a"], r["id_b"]) for r in pairs] == [(5, 6)]

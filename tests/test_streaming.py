@@ -647,55 +647,6 @@ def test_streaming_lsh_screen_matches_batch(spark, tmp_path):
     assert flagged_docs == {a for (a, _) in exp}
 
 
-def test_streaming_lsh_screen_xxh64_matches_batch(spark, tmp_path):
-    """Same stream-static parity under the all-native xxh64 scheme:
-    an xxh64-built index probed by an xxh64 stream emits exactly the
-    batch minhash_lsh_join(engine='xxh64') pairs with n_bands
-    multiplicity (band keys are scheme-specific, so index and probe
-    engines must match — this pins that contract end to end)."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from ticktock_spark.pipeline.dedup import minhash_lsh_join
-    from ticktock_spark.schema import load_table
-    from ticktock_spark.streaming.dedup_lsh import (
-        corpus_band_index,
-        streaming_lsh_candidates,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    corpus = docs.filter(F.col("doc_id") % 3 != 0)
-    arriving = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id", "text")
-    index = corpus_band_index(corpus, engine="xxh64")
-
-    (tmp_path / "in").mkdir()
-    rows = [{"doc_id": r["doc_id"], "text": r["text"]} for r in arriving.collect()]
-    (tmp_path / "in" / "b0.json").write_text("\n".join(json.dumps(r) for r in rows))
-    stream = spark.readStream.schema("doc_id long, text string").json(
-        str(tmp_path / "in")
-    )
-    out = streaming_lsh_candidates(stream, index, engine="xxh64")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("lsh_screen_x")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got: dict = {}
-    for r in spark.sql("select * from lsh_screen_x").collect():
-        key = (r["doc_id"], r["corpus_id"])
-        got[key] = got.get(key, 0) + 1
-    exp = {
-        (r["left_id"], r["right_id"]): r["n_bands"]
-        for r in minhash_lsh_join(arriving, corpus, engine="xxh64").collect()
-    }
-    assert got == exp and len(got) > 0
-
-
 def test_streaming_novelty_screen(spark, tmp_path):
     """foreachBatch novelty screen: exact dup and verified near-dup of
     corpus docs are dropped; the genuinely novel doc lands in the sink."""

@@ -101,13 +101,30 @@ def _per_series(df: DataFrame) -> DataFrame:
 
 def _split_series_label(m: str) -> tuple[str, dict[str, str]]:
     """Composite ``metric{k=v,...}`` label → (metric, tags dict); plain
-    labels pass through with empty tags."""
+    labels pass through with empty tags. Decodes canonical_series_key's
+    escaping: a backslash takes the next character literally, an
+    unescaped ``,`` ends an entry and its first unescaped ``=`` splits
+    key from value (entries without one are skipped)."""
     b, e = m.find("{"), m.rfind("}")
     if b < 0 or e < b:
         return m, {}
-    tags = dict(
-        kv.split("=", 1) for kv in m[b + 1 : e].split(",") if "=" in kv
-    )
+    tags: dict[str, str] = {}
+    key: str | None = None
+    cur: list[str] = []
+    body = iter(m[b + 1 : e])
+    for ch in body:
+        if ch == "\\":
+            cur.append(next(body, ""))
+        elif ch == "=" and key is None:
+            key, cur = "".join(cur), []
+        elif ch == ",":
+            if key is not None:
+                tags[key] = "".join(cur)
+            key, cur = None, []
+        else:
+            cur.append(ch)
+    if key is not None:
+        tags[key] = "".join(cur)
     return m[:b] + m[e + 1 :], tags
 
 

@@ -573,11 +573,16 @@ class _Handler(BaseHTTPRequestHandler):
 
                 now = int(_t.time() * 1000)
                 dps = []
-                for line in body.decode().splitlines():
-                    for dp in parse_influx_line(line):
-                        if dp["ts"] is None:
-                            dp["ts"] = now
-                        dps.append(dp)
+                try:
+                    for line in body.decode().splitlines():
+                        for dp in parse_influx_line(line):
+                            if dp["ts"] is None:
+                                dp["ts"] = now
+                            dps.append(dp)
+                except (ValueError, OverflowError) as e:
+                    # a timestamp token that is not a number (or is
+                    # inf): the whole body is refused, nothing buffered
+                    raise _BadRequest(str(e)) from e
                 self._ingest(dps)
             elif route == "/api/query":
                 import time as _t

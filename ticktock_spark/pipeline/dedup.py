@@ -463,7 +463,6 @@ def minhash_lsh_candidates(
     k: int = 5,
     num_hashes: int = 8,
     bands: int = 4,
-    parallelism: int | None = None,
     shingles_df: DataFrame | None = None,
     engine: str = "pandas",
     bucket_cap: int | None = None,
@@ -492,7 +491,7 @@ def minhash_lsh_candidates(
     against viral template keys.
     """
     rows = num_hashes // bands
-    par = parallelism or df.sparkSession.sparkContext.defaultParallelism
+    par = df.sparkSession.sparkContext.defaultParallelism
     # spread_scan, not an unconditional repartition (r11): a single-file
     # scan still spreads across tasks locally, but at scale — where the
     # scan already has >= par splits — no full-text exchange is added
@@ -801,8 +800,6 @@ def minhash_lsh_join(
     k: int = 5,
     num_hashes: int = 8,
     bands: int = 4,
-    parallelism: int | None = None,
-    engine: str = "pandas",
 ) -> DataFrame:
     """Cross-corpus LSH: near-duplicate CANDIDATE pairs between two
     corpora (e.g. a new crawl vs the standing training set) without ever
@@ -813,7 +810,7 @@ def minhash_lsh_join(
     over the union of both corpora (alias the pair columns to
     id_a/id_b first).
 
-    Same hash scheme as minhash_lsh_candidates' pandas engine (md5
+    Same hash scheme as minhash_lsh_candidates' default engine (md5
     signatures in C, the scheme q34's oracle specifies), so a given
     doc pair buckets identically whether deduped within or across
     corpora. One shuffle per side into the band-key join; a viral
@@ -823,23 +820,9 @@ def minhash_lsh_join(
     for the self-join path.
     """
     rows = num_hashes // bands
-    par = parallelism or left.sparkSession.sparkContext.defaultParallelism
+    par = left.sparkSession.sparkContext.defaultParallelism
 
     def banded(df: DataFrame, out_id: str) -> DataFrame:
-        if engine == "xxh64":
-            # text-column null filter BEFORE the shingle projection (not
-            # element_at(sh,1) after — that re-inlines the shingle
-            # expression into the predicate; see minhash_lsh_candidates)
-            sh = spread_scan(
-                df.filter(F.col(text_col).isNotNull()), par
-            ).select(F.col(id_col), shingles(F.col(text_col), k).alias("sh"))
-            b = sh.select(
-                id_col,
-                F.posexplode(
-                    banded_keys_xxh64(F.col("sh"), num_hashes, bands)
-                ).alias("band", "key"),
-            )
-            return b.withColumnRenamed(id_col, out_id)
         id_type = dict(df.select(id_col).dtypes)[id_col]
         nm = spread_scan(df, par).select(
             F.col(id_col), normalize_text(F.col(text_col)).alias("norm")
@@ -859,15 +842,6 @@ def minhash_lsh_join(
     )
 
 
-#: The ``profile='scale'`` defaults: all-JVM xxhash64 signatures (no
-#: Python workers, no Arrow text transfer — measured 5.4× the hashlib
-#: engine on a cache-hostile corpus, SCALE.md) and a finite viral-bucket
-#: cap (256 = the SCALE.md-measured value: 30× faster / 350× less pair
-#: volume on a template-flood corpus, with bucket truncation as the
-#: documented recall trade).
-SCALE_PROFILE = {"engine": "xxh64", "bucket_cap": 256}
-
-
 def dedup_pipeline(
     docs: DataFrame,
     text_col: str = "text",
@@ -875,9 +849,6 @@ def dedup_pipeline(
     jaccard_threshold: float = 0.5,
     num_hashes: int = 8,
     bands: int = 4,
-    engine: str | None = None,
-    bucket_cap: int | None = None,
-    profile: str | None = None,
 ) -> DataFrame:
     """The end-to-end dedup composition a production corpus actually
     runs: EXACT dedup first (md5 groups → canonical min-id), then
@@ -900,26 +871,13 @@ def dedup_pipeline(
     exactly one doc per cluster (the cluster id itself). Downstream
     dedup = ``filter(is_kept)``.
 
-    ``profile='scale'`` is the production preset for a blind 100 TB
-    run: it fills any UNSET knob from ``SCALE_PROFILE`` (engine='xxh64',
-    bucket_cap=256) — explicitly passed values always win. The default
-    (no profile) stays engine='pandas'/uncapped: hash-scheme-portable
-    and exact, which is what the DuckDB oracles pin. Candidate SETS
-    differ across engines on low-jaccard junk pairs, but the VERIFIED
-    output is engine-robust on real corpora (q77's oracle passes under
-    either engine; exact-duplicate recall is structural under any hash).
+    Candidates use the md5 scheme, uncapped: exact, and what q77's
+    DuckDB oracle pins. A caller that wants the all-JVM xxh64 family
+    and a viral-bucket cap composes ``minhash_lsh_candidates(
+    engine='xxh64', bucket_cap=...)`` → ``verify_jaccard`` →
+    ``dedup_clusters`` itself (q34x's shape).
     """
     from ticktock_spark.pipeline.cluster import dedup_clusters
-
-    if profile is not None:
-        if profile != "scale":
-            raise ValueError(f"unknown dedup profile: {profile!r}")
-        if engine is None:
-            engine = SCALE_PROFILE["engine"]
-        if bucket_cap is None:
-            bucket_cap = SCALE_PROFILE["bucket_cap"]
-    elif engine is None:
-        engine = "pandas"
 
     digests = docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("digest"))
     groups = digests.groupBy("digest").agg(F.min(id_col).alias("canonical_id"))
@@ -932,8 +890,6 @@ def dedup_pipeline(
         id_col=id_col,
         num_hashes=num_hashes,
         bands=bands,
-        engine=engine,
-        bucket_cap=bucket_cap,
     )
     verified = verify_jaccard(
         canon, cand, threshold=jaccard_threshold, text_col=text_col, id_col=id_col
@@ -1180,8 +1136,6 @@ def cross_source_matrix(
     k: int = 5,
     num_hashes: int = 8,
     bands: int = 4,
-    engine: str = "pandas",
-    bucket_cap: int | None = None,
 ) -> DataFrame:
     """Cross-source near-duplicate contamination matrix: for every pair
     of sources, how many Jaccard-verified near-dup pairs straddle them —
@@ -1214,13 +1168,6 @@ def cross_source_matrix(
         .select(F.col(id_col), shingles(F.col(text_col), k).alias("sh"))
         .persist()
     )
-    # ``engine`` / ``bucket_cap`` are the SCALE_PROFILE knobs: on
-    # templated corpora the band buckets go viral (measured 2.4M
-    # candidates from 5k sf0.1 docs) and candidate mass — not the
-    # verified output — dominates cost; engine='xxh64' +
-    # bucket_cap=256 is the production shape (same tradeoff q34x/q77
-    # document; the md5 'pandas' default is the scheme the DuckDB
-    # oracle specifies).
     cand = minhash_lsh_candidates(
         df,
         text_col=text_col,
@@ -1228,9 +1175,7 @@ def cross_source_matrix(
         k=k,
         num_hashes=num_hashes,
         bands=bands,
-        shingles_df=sh if engine == "pandas" else None,
-        engine=engine,
-        bucket_cap=bucket_cap,
+        shingles_df=sh,
     )
     ver = verify_jaccard(
         df,
@@ -1281,24 +1226,11 @@ def _band_keys_frame(
     id_col: str,
     num_hashes: int,
     bands: int,
-    engine: str,
 ) -> DataFrame:
-    """(id, sh) shingle frame → (id, band, key) LSH band-key rows.
-
-    ``engine='pandas'`` is the Arrow/hashlib md5 scheme (hex string
-    keys, the q34 oracle's scheme); ``'xxh64'`` the fused JVM-native
-    family (``banded_keys_xxh64``). xxh64 key types differ (long vs
-    string) — never join an xxh64 frame against an md5 one."""
+    """(id, sh) shingle frame → (id, band, key) LSH band-key rows in
+    the Arrow/hashlib md5 scheme (hex string keys, the q34 oracle's
+    scheme)."""
     sh = sh_df.filter(F.element_at(F.col("sh"), 1).isNotNull())
-    if engine == "xxh64":
-        return sh.select(
-            id_col,
-            F.posexplode(
-                banded_keys_xxh64(F.col("sh"), num_hashes, bands)
-            ).alias("band", "key"),
-        )
-    if engine != "pandas":
-        raise ValueError(f"unknown band-key engine: {engine!r}")
     id_type = dict(sh_df.dtypes)[id_col]
     return sh.mapInPandas(
         _banded_pandas(num_hashes, bands, num_hashes // bands, id_col),
@@ -1315,7 +1247,6 @@ def tile_band_keys(
     bands: int = 4,
     window_words: int = 24,
     stride: int | None = None,
-    engine: str = "pandas",
 ) -> DataFrame:
     """(id, band, key) LSH band keys for the overlapping word-window
     TILES of every document longer than ``window_words`` words — each
@@ -1365,9 +1296,7 @@ def tile_band_keys(
     tile_sh = tiles.select(
         F.col(id_col), shingles(F.col("tile"), k).alias("sh")
     )
-    return _band_keys_frame(
-        tile_sh, id_col, num_hashes, bands, engine
-    ).distinct()
+    return _band_keys_frame(tile_sh, id_col, num_hashes, bands).distinct()
 
 
 def windowed_containment_candidates(
@@ -1379,7 +1308,6 @@ def windowed_containment_candidates(
     bands: int = 4,
     window_words: int = 24,
     stride: int | None = None,
-    engine: str = "pandas",
     shingles_df: DataFrame | None = None,
     bucket_cap: int | None = None,
 ) -> DataFrame:
@@ -1405,9 +1333,8 @@ def windowed_containment_candidates(
     same banded-key hash join as LSH with ``bucket_cap`` available as
     the viral-template backstop (cap enforced on whole-doc key
     frequency — a hot template key is dropped from BOTH sides before
-    the join). ``engine='xxh64'`` keeps all tile hashing JVM-native for
-    the 100 TB path; 'pandas' (default) is the md5 scheme the DuckDB
-    oracle mirrors.
+    the join). Tiles and documents are hashed in the md5 scheme the
+    DuckDB oracle mirrors.
     """
     stride = int(stride) if stride else max(1, window_words // 2)
     par = df.sparkSession.sparkContext.defaultParallelism
@@ -1416,9 +1343,7 @@ def windowed_containment_candidates(
         shingles_df = spread_scan(base, par).select(
             F.col(id_col), shingles(F.col(text_col), k).alias("sh")
         )
-    doc_keys = _band_keys_frame(
-        shingles_df, id_col, num_hashes, bands, engine
-    )
+    doc_keys = _band_keys_frame(shingles_df, id_col, num_hashes, bands)
     if bucket_cap is not None:
         hot = (
             doc_keys.groupBy("band", "key")
@@ -1436,7 +1361,6 @@ def windowed_containment_candidates(
         bands=bands,
         window_words=window_words,
         stride=stride,
-        engine=engine,
     )
     if bucket_cap is not None:
         tile_keys = tile_keys.join(hot, ["band", "key"], "left_anti")
@@ -1466,7 +1390,6 @@ def containment_pairs(
     windowed: bool = False,
     window_words: int = 24,
     stride: int | None = None,
-    window_engine: str = "pandas",
     bucket_cap: int | None = None,
 ) -> DataFrame:
     """Asymmetric CONTAINMENT detection: |A∩B| / min(|A|, |B|) >= t —
@@ -1505,8 +1428,7 @@ def containment_pairs(
                 df, text_col=text_col, id_col=id_col, k=k,
                 num_hashes=num_hashes, bands=bands,
                 window_words=window_words, stride=stride,
-                engine=window_engine, shingles_df=sh,
-                bucket_cap=bucket_cap,
+                shingles_df=sh, bucket_cap=bucket_cap,
             )
         ).distinct()
     joined = (

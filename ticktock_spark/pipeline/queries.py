@@ -217,10 +217,10 @@ def q34(spark, sf_dir):
 
 
 def q34x(spark, sf_dir):
-    """q34 under the production SCALE_PROFILE knobs (engine='xxh64',
-    bucket_cap=256): all-JVM xxhash64 signatures — no Python workers, no
-    Arrow text transfer — plus the viral-bucket backstop. Same workload
-    as q34 for a direct bench comparison of the two engines.
+    """q34 with engine='xxh64' and bucket_cap=256: all-JVM xxhash64
+    signatures — no Python workers, no Arrow text transfer — plus the
+    viral-bucket backstop (256 = the SCALE.md-measured cap). Same
+    workload as q34 for a direct bench comparison of the two engines.
 
     BENCH-ONLY, deliberately outside the driver-verified registry
     (round-6 decision, per the r5 verdict): the candidate SET is
@@ -232,12 +232,9 @@ def q34x(spark, sf_dir):
     verified-output parity; the bucket_cap backstop is excluded from an
     exact oracle on principle — it intentionally trades recall on
     viral (>cap) buckets, so no hash-invariant exact oracle exists."""
-    from ticktock_spark.pipeline.dedup import SCALE_PROFILE
-
     d = _table(spark, sf_dir, "documents")
     return dd.minhash_lsh_candidates(
-        d, num_hashes=8, bands=4, engine=SCALE_PROFILE["engine"],
-        bucket_cap=SCALE_PROFILE["bucket_cap"],
+        d, num_hashes=8, bands=4, engine="xxh64", bucket_cap=256
     )
 
 

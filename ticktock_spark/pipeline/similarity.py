@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ticktock_spark.pipeline.util import spread_scan
+
 # Upper bound on rows x queries cells per yielded Arrow frame in the
 # pair-product kernels (cosine_scores, knn_quantized). An unchunked
 # 10k-row Arrow input batch against a 20k-vector broadcast query side
@@ -148,19 +150,12 @@ def brute_force_knn(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def _spread_scan(df: DataFrame, min_parallelism: int | None) -> DataFrame:
-    from ticktock_spark.pipeline.util import spread_scan
-
-    return spread_scan(df, min_parallelism)
-
-
 def cosine_scores(
     corpus: DataFrame,
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    quantize: bool = True,
 ) -> DataFrame:
     """(query_id, vec_id, cosine) for every corpus × query pair, scored
     as an Arrow-batched numpy block product.
@@ -208,8 +203,7 @@ def cosine_scores(
                 for d in range(dim):
                     acc_c += C[:, d] * C[:, d]
                 cos = dots / (np.sqrt(acc_c)[:, None] * b_qnorms[None, :])
-                if quantize:
-                    cos = np.floor(cos * 1_000_000.0 + 0.5) / 1_000_000.0
+                cos = np.floor(cos * 1_000_000.0 + 0.5) / 1_000_000.0
                 keep = c_ids[:, None] != b_qids[None, :]
                 ci, qj = np.nonzero(keep)
                 yield pd.DataFrame(
@@ -231,7 +225,6 @@ def cosine_argmax_partials(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    quantize: bool = True,
     min_parallelism: int | None = None,
 ) -> DataFrame:
     """Per-(query, corpus-block) argmax rows of ``cosine_scores``: for
@@ -257,13 +250,13 @@ def cosine_argmax_partials(
     matrix, same sequential per-dimension float64 accumulation, same
     6-decimal quantization), so the winning (cosine, vec_id) per query
     is the one the full table's max_by would pick. Requires an integral
-    ``id_col`` (the in-kernel tiebreak uses an int64 sentinel). With
-    ``quantize=False`` a -0.0 cosine could tie a +0.0 one under numpy
-    (== treats them equal) while Spark's Double.compare orders them;
+    ``id_col`` (the in-kernel tiebreak uses an int64 sentinel).
+    Unquantized, a -0.0 cosine could tie a +0.0 one under numpy (==
+    treats them equal) while Spark's Double.compare orders them; the
     quantization canonicalizes -0.0 away (floor(x*1e6+0.5) of a
-    representable value never yields -0.0), so keep quantize=True.
+    representable value never yields -0.0).
 
-    ``min_parallelism`` spreads a single-file scan (see ``_spread_scan``)
+    ``min_parallelism`` spreads a single-file scan (see ``spread_scan``)
     — grouping of corpus rows into blocks does not affect the global
     argmax, so the repartition is result-invariant.
     """
@@ -303,8 +296,7 @@ def cosine_argmax_partials(
                 for d in range(dim):
                     acc_c += C[:, d] * C[:, d]
                 cos = dots / (np.sqrt(acc_c)[:, None] * b_qnorms[None, :])
-                if quantize:
-                    cos = np.floor(cos * 1_000_000.0 + 0.5) / 1_000_000.0
+                cos = np.floor(cos * 1_000_000.0 + 0.5) / 1_000_000.0
                 # winner = max cosine among FINITE candidates (min id on
                 # ties); NaN-cosine candidates only win when a query has
                 # no finite candidate at all (they surface as NULL after
@@ -345,7 +337,7 @@ def cosine_argmax_partials(
                     }
                 )
 
-    src = _spread_scan(corpus.select(id_col, vec_col), min_parallelism)
+    src = spread_scan(corpus.select(id_col, vec_col), min_parallelism)
     return src.mapInPandas(
         block, schema=f"query_id {qid_type}, vec_id {id_type}, cosine double"
     )
@@ -358,8 +350,6 @@ def cosine_topk_partials(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    quantize: bool = True,
-    min_parallelism: int | None = None,
 ) -> DataFrame:
     """Per-(query, corpus-block) top-``k`` rows of ``cosine_scores``
     under the (cosine DESC, vec_id ASC) total order every consumer
@@ -420,8 +410,7 @@ def cosine_topk_partials(
                 for d in range(dim):
                     acc_c += C[:, d] * C[:, d]
                 cos = dots / (np.sqrt(acc_c)[:, None] * b_qnorms[None, :])
-                if quantize:
-                    cos = np.floor(cos * 1_000_000.0 + 0.5) / 1_000_000.0
+                cos = np.floor(cos * 1_000_000.0 + 0.5) / 1_000_000.0
                 out_q: list = []
                 out_id: list = []
                 out_cos: list = []
@@ -447,8 +436,7 @@ def cosine_topk_partials(
                         }
                     )
 
-    src = _spread_scan(corpus.select(id_col, vec_col), min_parallelism)
-    return src.mapInPandas(
+    return corpus.select(id_col, vec_col).mapInPandas(
         block, schema=f"query_id {qid_type}, vec_id {id_type}, cosine double"
     )
 
@@ -458,7 +446,6 @@ def cosine_neardup_pairs(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    quantize: bool = True,
     block_rows: int = 8192,
     bucket_col: str | None = None,
 ) -> DataFrame:
@@ -553,8 +540,7 @@ def cosine_neardup_pairs(
             acc_a += A[:, d] * A[:, d]
             acc_b += B[:, d] * B[:, d]
         cos = dots / (np.sqrt(acc_a)[:, None] * np.sqrt(acc_b)[None, :])
-        if quantize:
-            cos = np.floor(cos * 1_000_000.0 + 0.5) / 1_000_000.0
+        cos = np.floor(cos * 1_000_000.0 + 0.5) / 1_000_000.0
         if bi == bj:
             keep = (a_ids[:, None] < b_ids[None, :]) & (cos >= threshold)
             ai, bjx = np.nonzero(keep)
@@ -659,7 +645,6 @@ def srp_lsh_knn(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    quantize: bool = True,
 ) -> DataFrame:
     """Approximate cosine top-k via SRP-LSH with Hamming≤1 multiprobe.
 
@@ -695,9 +680,7 @@ def srp_lsh_knn(
     cand = bucketed.join(F.broadcast(probes), "bucket").filter(
         F.col(id_col) != F.col(query_id_col)
     )
-    score = cosine(F.col(vec_col), F.col("__qvec"))
-    if quantize:
-        score = _q6col(score)
+    score = _q6col(cosine(F.col(vec_col), F.col("__qvec")))
     scored = cand.select(query_id_col, id_col, score.alias("cosine"))
     w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -727,7 +710,6 @@ def ivf_knn(
     vec_col: str = "embedding",
     bucket_col: str = "label",
     query_id_col: str = "query_id",
-    quantize: bool = True,
 ) -> DataFrame:
     """Approximate top-k: probe the nprobe nearest centroids per query,
     then exact cosine within those buckets only. Final ranking is on the
@@ -745,9 +727,7 @@ def ivf_knn(
     candidates = corpus.join(
         F.broadcast(probes.select(query_id_col, bucket_col, "__qvec")), on=bucket_col
     ).filter(F.col(id_col) != F.col(query_id_col))
-    score = cosine(F.col(vec_col), F.col("__qvec"))
-    if quantize:
-        score = _q6col(score)
+    score = _q6col(cosine(F.col(vec_col), F.col("__qvec")))
     scored = candidates.select(query_id_col, id_col, score.alias("cosine"))
     w2 = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
     return scored.withColumn("rank", F.row_number().over(w2)).filter(F.col("rank") <= k)
@@ -788,7 +768,6 @@ def ivf_index_knn(
     vec_col: str = "embedding",
     bucket_col: str = "label",
     query_id_col: str = "query_id",
-    quantize: bool = True,
 ) -> DataFrame:
     """Top-k against a written IVF index with STATIC partition pruning.
 
@@ -827,9 +806,7 @@ def ivf_index_knn(
     candidates = vectors.join(
         F.broadcast(probes.select(query_id_col, bucket_col, "__qvec")), on=bucket_col
     ).filter(F.col(id_col) != F.col(query_id_col))
-    score = cosine(F.col(vec_col), F.col("__qvec"))
-    if quantize:
-        score = _q6col(score)
+    score = _q6col(cosine(F.col(vec_col), F.col("__qvec")))
     scored = candidates.select(query_id_col, id_col, score.alias("cosine"))
     w2 = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
     return scored.withColumn("rank", F.row_number().over(w2)).filter(F.col("rank") <= k)
@@ -1009,7 +986,6 @@ def cosine_neardup_bucketed(
     seed: int = 7,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    quantize: bool = True,
     block_rows: int = 8192,
 ) -> DataFrame:
     """Semantic near-dup pairs at the scale where even the blocked
@@ -1035,7 +1011,6 @@ def cosine_neardup_bucketed(
         threshold,
         id_col=id_col,
         vec_col=vec_col,
-        quantize=quantize,
         block_rows=block_rows,
         bucket_col="bucket",
     )

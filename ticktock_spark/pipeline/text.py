@@ -1103,7 +1103,6 @@ def winnowing_fingerprints(
     w: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "pandas",
 ) -> DataFrame:
     """Winnowing document fingerprints (the MOSS rolling-hash scheme):
     hash every k-gram of the normalized text, slide a window of ``w``
@@ -1116,126 +1115,66 @@ def winnowing_fingerprints(
     are kept. Gram hashes are the first 8 hex chars of md5 — fixed-width
     hex, so lexicographic MIN equals numeric MIN in every engine.
 
-    ``engine='pandas'`` (default, the md5 scheme q94's DuckDB oracle
-    specifies): the per-gram md5 runs in C via an Arrow-batched
-    mapInPandas with a per-partition gram→hash cache — the same
-    hot-loop treatment as MinHash. Normalization stays JVM-side so the
-    regex semantics can't drift. Downstream overlap detection groups
-    the (fp) column — the same bucket-join shape as LSH candidates.
-    ``engine='xxh64'`` swaps the gram hash for JVM-native xxhash64
-    (fp column becomes BIGINT): a different hash family selects
-    different window minima, so fp SETS differ from the md5 scheme,
-    but the ≥ (w+k-1)-substring guarantee holds under any hash — pinned
-    by test. The 100 TB path: all-native hashing, no Python workers,
-    no Arrow text transfer.
+    The md5 scheme is the one q94's DuckDB oracle specifies: the
+    per-gram md5 runs in C via an Arrow-batched mapInPandas with a
+    per-partition gram→hash cache — the same hot-loop treatment as
+    MinHash. Normalization stays JVM-side so the regex semantics can't
+    drift. Downstream overlap detection groups the (fp) column — the
+    same bucket-join shape as LSH candidates.
     """
     norm = normalize_text(F.col(text_col))
     par = df.sparkSession.sparkContext.defaultParallelism
-    if engine == "xxh64":
-        # Bind the (regex-heavy) normalization through a single-element
-        # array, as shingles() does: referenced directly inside the
-        # per-gram lambda it would be re-interpreted once per gram
-        # position (HOF lambdas get no CSE) — O(chars²) regex work per
-        # doc, defeating this engine's all-native 100 TB purpose.
-        # r11: empty-norm docs are handled INSIDE the single-evaluation
-        # binding (hs = [] via the length guard on the bound nm) and
-        # dropped post-explode — the old `filter(length(norm) > 0)`
-        # re-evaluated the whole normalize regex chain in the Filter
-        # node (a deterministic post-filter would be pushed back below
-        # the repartition and re-inline it, probed in Spark 4.1).
-        # Exactness: elements of hs are xxhash64 of nonempty strings
-        # (never NULL) and every window slice of a nonempty hs is
-        # nonempty, so array_min yields NULL iff hs = [] iff norm = ''
-        # — fp IS NOT NULL drops exactly the docs the pre-filter
-        # dropped. NULL text keeps its own cheap, scan-pushable filter.
-        hashes = F.flatten(
-            F.transform(
-                F.array(norm),
-                lambda nm: F.when(
-                    F.length(nm) > 0,
-                    F.transform(
-                        F.sequence(
-                            F.lit(1),
-                            F.greatest(F.length(nm) - F.lit(k - 1), F.lit(1)),
-                        ),
-                        lambda i: F.xxhash64(nm.substr(i, F.lit(k))),
-                    ),
-                ).otherwise(F.array().cast("array<bigint>")),
-            )
-        )
-        # The gram-hash array MUST be materialized behind an exchange
-        # before the window-minima pass — projected in one stage,
-        # Catalyst inlines the whole hash-array expression into every
-        # window lambda (O(len²) hash evaluations per document); the
-        # repartition is the same CollapseProject barrier as MinHash's.
-        grams = (
-            df.filter(F.col(text_col).isNotNull())
-            .select(F.col(id_col), hashes.alias("hs"))
-            .repartition(par)
-        )
-        hs = F.col("hs")
-        n_windows = F.greatest(F.size(hs) - F.lit(w - 1), F.lit(1))
-        minima = F.transform(
-            F.sequence(F.lit(1), n_windows),
-            lambda j: F.array_min(F.slice(hs, j, w)),
-        )
-        return grams.select(
-            F.col(id_col), F.explode(F.array_distinct(minima)).alias("fp")
-        ).filter(F.col("fp").isNotNull())
-    if engine == "pandas":
-        # r11: the old `filter(length(norm) > 0)` evaluated the whole
-        # normalize regex chain in the Filter node (single scan task,
-        # below the spread) on top of the projection's evaluation;
-        # empty-norm docs now skip INSIDE the kernel (`if not nrm`),
-        # which is plan-hazard-free, and NULL text keeps a cheap
-        # scan-pushable filter (length(NULL) > 0 dropped it before).
-        nm = (
-            spread_scan(df.filter(F.col(text_col).isNotNull()), par)
-            .select(F.col(id_col), norm.alias("norm"))
-        )
-        id_type = dict(nm.dtypes)[id_col]
+    # r11: the old `filter(length(norm) > 0)` evaluated the whole
+    # normalize regex chain in the Filter node (single scan task,
+    # below the spread) on top of the projection's evaluation;
+    # empty-norm docs now skip INSIDE the kernel (`if not nrm`),
+    # which is plan-hazard-free, and NULL text keeps a cheap
+    # scan-pushable filter (length(NULL) > 0 dropped it before).
+    nm = (
+        spread_scan(df.filter(F.col(text_col).isNotNull()), par)
+        .select(F.col(id_col), norm.alias("norm"))
+    )
+    id_type = dict(nm.dtypes)[id_col]
 
-        def _batches(pdfs):
-            import hashlib
+    def _batches(pdfs):
+        import hashlib
 
-            md5 = hashlib.md5
-            cache: dict[str, str] = {}
+        md5 = hashlib.md5
+        cache: dict[str, str] = {}
 
-            def h(g: str) -> str:
-                v = cache.get(g)
-                if v is None:
-                    v = md5(g.encode()).hexdigest()[:8]
-                    if len(cache) > 2_000_000:
-                        cache.clear()
-                    cache[g] = v
-                return v
+        def h(g: str) -> str:
+            v = cache.get(g)
+            if v is None:
+                v = md5(g.encode()).hexdigest()[:8]
+                if len(cache) > 2_000_000:
+                    cache.clear()
+                cache[g] = v
+            return v
 
-            import pandas as pd
+        import pandas as pd
 
-            for pdf in pdfs:
-                ids: list = []
-                fps: list[str] = []
-                for doc_id, nrm in zip(pdf[id_col], pdf["norm"]):
-                    if not nrm:
-                        # empty norm: the pre-r11 plan-level pre-filter
-                        # dropped these docs; same semantics, kernel-side
-                        continue
-                    hs = [
-                        h(nrm[i : i + k])
-                        for i in range(max(len(nrm) - k + 1, 1))
-                    ]
-                    sel = {
-                        min(hs[j : j + w])
-                        for j in range(max(len(hs) - w + 1, 1))
-                    }
-                    ids.extend([doc_id] * len(sel))
-                    fps.extend(sel)
-                # yield bound: fingerprints-per-doc <= token count (row-local in doc size)
-                yield pd.DataFrame({id_col: ids, "fp": fps})
+        for pdf in pdfs:
+            ids: list = []
+            fps: list[str] = []
+            for doc_id, nrm in zip(pdf[id_col], pdf["norm"]):
+                if not nrm:
+                    # empty norm: the pre-r11 plan-level pre-filter
+                    # dropped these docs; same semantics, kernel-side
+                    continue
+                hs = [
+                    h(nrm[i : i + k])
+                    for i in range(max(len(nrm) - k + 1, 1))
+                ]
+                sel = {
+                    min(hs[j : j + w])
+                    for j in range(max(len(hs) - w + 1, 1))
+                }
+                ids.extend([doc_id] * len(sel))
+                fps.extend(sel)
+            # yield bound: fingerprints-per-doc <= token count (row-local in doc size)
+            yield pd.DataFrame({id_col: ids, "fp": fps})
 
-        return nm.mapInPandas(_batches, schema=f"{id_col} {id_type}, fp string")
-
-    raise ValueError(f"unknown winnowing engine: {engine!r}")
+    return nm.mapInPandas(_batches, schema=f"{id_col} {id_type}, fp string")
 
 
 def winnowing_overlap_pairs(
@@ -1245,7 +1184,6 @@ def winnowing_overlap_pairs(
     w: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "pandas",
     bucket_cap: int | None = None,
 ) -> DataFrame:
     """Document pairs sharing ≥ ``min_shared`` winnowing fingerprints —
@@ -1271,9 +1209,7 @@ def winnowing_overlap_pairs(
     )
 
     par = df.sparkSession.sparkContext.defaultParallelism
-    fps = winnowing_fingerprints(
-        df, k=k, w=w, text_col=text_col, id_col=id_col, engine=engine
-    )
+    fps = winnowing_fingerprints(df, k=k, w=w, text_col=text_col, id_col=id_col)
     buckets = _collect_buckets(fps, id_col, bucket_cap, key_cols=("fp",))
     id_type = dict(df.select(id_col).dtypes)[id_col]
     pairs = (

@@ -4,12 +4,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-#: Measurement hook: when True, spread_scan is an unconditional no-op.
-#: Lets an A/B harness time a query with and without the spread inside
-#: ONE session (this host's run-to-run drift exceeds most per-query
-#: effects). Never set in production code paths.
-_DISABLE_SPREAD = False
-
 
 def spread_scan(df: DataFrame, min_parallelism: int | None) -> DataFrame:
     """Round-robin repartition ONLY when the plan would otherwise run on
@@ -24,7 +18,7 @@ def spread_scan(df: DataFrame, min_parallelism: int | None) -> DataFrame:
     Only use in front of ROW-LOCAL work (each output row a function of
     one input row): regrouping rows across partitions then cannot
     change any downstream result."""
-    if _DISABLE_SPREAD or not min_parallelism:
+    if not min_parallelism:
         return df
     if df.isStreaming:
         # a micro-batch's partitioning is the source's business (and

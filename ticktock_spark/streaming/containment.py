@@ -29,10 +29,9 @@ verified output matches the batch operator exactly on (arrival, corpus)
 pairs — pinned by test. Verification is the same exact
 |A∩B| / min(|A|,|B|) over full shingle sets, candidate-bounded.
 
-Same md5 hash scheme as the batch path ('pandas' engine; 'xxh64' on
-both sides for the JVM-native family); epoch-partitioned dynamic-overwrite
-sink for crash-replay idempotence (the house streaming-sink
-discipline).
+Same md5 hash scheme as the batch path; epoch-partitioned
+dynamic-overwrite sink for crash-replay idempotence (the house
+streaming-sink discipline).
 """
 
 from __future__ import annotations
@@ -55,36 +54,23 @@ def corpus_containment_state(
     bands: int = 4,
     window_words: int = 24,
     stride: int | None = None,
-    engine: str = "pandas",
-    bucket_cap: int | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The standing corpus side, computed once per corpus version:
     (whole-doc band keys, tile band keys, shingle frame) — persist all
     three (or write to parquet, ideally bucketed by key) and hand to
-    ``streaming_quote_screen``. ``bucket_cap`` drops keys hotter than
-    the cap from BOTH indexes (viral-template backstop, measured in
-    SCALE.md's windowed-containment stress)."""
+    ``streaming_quote_screen``."""
     par = corpus.sparkSession.sparkContext.defaultParallelism
     sh = (
         corpus.filter(F.col(text_col).isNotNull())
         .repartition(par)
         .select(F.col(id_col), shingles(F.col(text_col), k).alias("sh"))
     )
-    whole = _band_keys_frame(sh, id_col, num_hashes, bands, engine)
+    whole = _band_keys_frame(sh, id_col, num_hashes, bands)
     tiles = tile_band_keys(
         corpus, text_col=text_col, id_col=id_col, k=k,
         num_hashes=num_hashes, bands=bands,
-        window_words=window_words, stride=stride, engine=engine,
+        window_words=window_words, stride=stride,
     )
-    if bucket_cap is not None:
-        hot = (
-            whole.groupBy("band", "key")
-            .agg(F.countDistinct(id_col).alias("_n"))
-            .filter(F.col("_n") > int(bucket_cap))
-            .select("band", "key")
-        )
-        whole = whole.join(hot, ["band", "key"], "left_anti")
-        tiles = tiles.join(hot, ["band", "key"], "left_anti")
     return whole, tiles, sh
 
 
@@ -101,7 +87,6 @@ def streaming_quote_screen(
     bands: int = 4,
     window_words: int = 24,
     stride: int | None = None,
-    engine: str = "pandas",
 ):
     """Screen every arriving document against the standing corpus for
     containment >= ``threshold`` (either direction). Emits one row per
@@ -134,13 +119,13 @@ def streaming_quote_screen(
             .persist()
         )
         try:
-            wb = _band_keys_frame(
-                sh_b, id_col, num_hashes, bands, engine
-            ).select(F.col(id_col).alias("new_id"), "band", "key")
+            wb = _band_keys_frame(sh_b, id_col, num_hashes, bands).select(
+                F.col(id_col).alias("new_id"), "band", "key"
+            )
             tb = tile_band_keys(
                 batch, text_col=text_col, id_col=id_col, k=k,
                 num_hashes=num_hashes, bands=bands,
-                window_words=window_words, stride=stride, engine=engine,
+                window_words=window_words, stride=stride,
             ).select(F.col(id_col).alias("new_id"), "band", "key")
             cand = (
                 wb.join(c_whole, ["band", "key"])

@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ticktock_spark.pipeline.dedup import _banded_pandas, banded_keys_xxh64, shingles
+from ticktock_spark.pipeline.dedup import _banded_pandas
 from ticktock_spark.pipeline.text import normalize_text
 
 
@@ -42,23 +42,7 @@ def _banded(
     k: int,
     num_hashes: int,
     bands: int,
-    engine: str = "pandas",
 ) -> DataFrame:
-    if engine == "xxh64":
-        # the fused sign+band aggregate: per-batch cost all-native, no
-        # Python workers in the screen path (see pipeline.dedup)
-        # text-column null filter BEFORE the shingle projection (not
-        # element_at(sh,1) after — that re-inlines the shingle expression
-        # into the predicate; see pipeline.dedup.minhash_lsh_candidates)
-        sh = df.filter(F.col(text_col).isNotNull()).select(
-            F.col(id_col), shingles(F.col(text_col), k).alias("sh")
-        )
-        return sh.select(
-            id_col,
-            F.posexplode(banded_keys_xxh64(F.col("sh"), num_hashes, bands)).alias(
-                "band", "key"
-            ),
-        )
     id_type = dict(df.select(id_col).dtypes)[id_col]
     nm = df.select(F.col(id_col), normalize_text(F.col(text_col)).alias("norm"))
     return nm.mapInPandas(
@@ -74,15 +58,13 @@ def corpus_band_index(
     k: int = 5,
     num_hashes: int = 8,
     bands: int = 4,
-    engine: str = "pandas",
 ) -> DataFrame:
     """The static side: (corpus_id, band, key) rows for the standing
     corpus. Compute once per corpus version; persist (parquet, bucketed
     by (band, key) for a shuffle-free stream join) and reload for the
-    streaming job. ``engine`` must match the probe side — band keys are
-    hash-scheme-specific (md5 hex strings vs xxh64 longs)."""
+    streaming job."""
     return _banded(
-        corpus, text_col, id_col, k, num_hashes, bands, engine
+        corpus, text_col, id_col, k, num_hashes, bands
     ).withColumnRenamed(id_col, "corpus_id")
 
 
@@ -94,17 +76,15 @@ def streaming_lsh_candidates(
     k: int = 5,
     num_hashes: int = 8,
     bands: int = 4,
-    engine: str = "pandas",
 ) -> DataFrame:
     """Arriving docs → near-dup candidate events against the corpus.
 
     Output stream: (doc_id, corpus_id, band) — one row per agreeing
     band (see module docstring for multiplicity semantics). Signatures
-    run per micro-batch (mapInPandas md5, or all-native xxh64 when
-    ``engine`` matches an xxh64-built index); the join is a stateless
+    run per micro-batch (mapInPandas md5); the join is a stateless
     stream-static hash join on (band, key).
     """
-    banded = _banded(doc_stream, text_col, id_col, k, num_hashes, bands, engine)
+    banded = _banded(doc_stream, text_col, id_col, k, num_hashes, bands)
     return banded.join(index, ["band", "key"]).select(id_col, "corpus_id", "band")
 
 
@@ -116,7 +96,6 @@ def streaming_flagged_hits(
     k: int = 5,
     num_hashes: int = 8,
     bands: int = 4,
-    engine: str = "pandas",
 ) -> DataFrame:
     """The review/quarantine feed: (doc_id, band) rows for every band
     that collided with the corpus (left-semi stream-static join — a doc
@@ -124,7 +103,7 @@ def streaming_flagged_hits(
     stateless). The complement ("novel docs only") needs the per-doc
     no-band-matched aggregate; do that in ``foreachBatch`` with the
     batch twin (module docstring)."""
-    banded = _banded(doc_stream, text_col, id_col, k, num_hashes, bands, engine)
+    banded = _banded(doc_stream, text_col, id_col, k, num_hashes, bands)
     return banded.join(index, ["band", "key"], "left_semi").select(id_col, "band")
 
 

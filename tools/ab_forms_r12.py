@@ -19,7 +19,7 @@ asserted EQUAL (sorted collect — q170 yields |metrics|*5 rows, q193
 |labels| rows; both tiny at any SF).
 
 Timing: interleaved OLD/NEW noop-sink runs (warm both arms first),
-min over --pairs runs per arm, same methodology as tools/ab_spread.py.
+min over --pairs runs per arm.
 
 Usage: python tools/ab_forms_r12.py [--pairs 3] [--which acf centroid]
 Env: SPARK_GRAFT_SF_DIR (default /root/repo/.scratch/sf1 — this tool

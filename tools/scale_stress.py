@@ -122,8 +122,10 @@ def main():
         )
     timed("dedup_pipeline", lambda: dd.dedup_pipeline(docs).count())
     timed(
-        "dedup_pipeline_scale",
-        lambda: dd.dedup_pipeline(docs, profile="scale").count(),
+        "minhash_lsh_candidates_xxh64_cap256",
+        lambda: dd.minhash_lsh_candidates(
+            docs, engine="xxh64", bucket_cap=256
+        ).count(),
     )
     timed(
         "dedup_pipeline_canon_candidates",
