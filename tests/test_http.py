@@ -461,6 +461,34 @@ def test_series_with_delimiters_in_tags_stay_distinct(spark):
         srv.stop()
 
 
+def test_lookup_keeps_series_with_delimiters_in_tags_apart(spark, tmp_path):
+    """``{a: '1,b=2'}`` and ``{a: '1', b: '2'}`` are two series in the
+    series dimension too: /api/search/lookup returns both, with distinct
+    tsuids, from the write buffer and again after a flush."""
+    from ticktock_spark.schema import series_key, series_tsuid
+
+    srv = TsdbHttpServer(spark, table_path=str(tmp_path / "dps")).start()
+    try:
+        body = "put m 1700000000 1 a=1,b=2\nput m 1700000000 2 a=1 b=2\n"
+        assert _post(srv, "/api/put", body)["success"] == 2
+        for flushed in (False, True):
+            if flushed:
+                assert srv.store.flush() == 2
+            look = _get(srv, "/api/search/lookup?m=m")
+            assert look["totalResults"] == 2, flushed
+            got = sorted(json.dumps(r["tags"], sort_keys=True) for r in look["results"])
+            assert got == sorted(
+                json.dumps(t, sort_keys=True) for t in ({"a": "1,b=2"}, {"a": "1", "b": "2"})
+            )
+            tsuids = {r["tsuid"] for r in look["results"]}
+            assert tsuids == {
+                series_tsuid(series_key("m", r["tags"])) for r in look["results"]
+            }
+            assert len(tsuids) == 2
+    finally:
+        srv.stop()
+
+
 def test_keepalive_replies_leave_without_delay(server):
     """Each reply leaves at once: 20 sequential keep-alive /api/version
     requests on one connection take a median well under the ~40 ms a

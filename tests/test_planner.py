@@ -307,7 +307,7 @@ def test_rollups_match_two_scan_build(spark):
     ctx.materialize_rollups()
 
     keys = ["metric", SERIES_KEY]
-    base = df.withColumn(SERIES_KEY, canonical_series_key(F.col("tags")))
+    base = df.withColumn(SERIES_KEY, canonical_series_key())
     dim = base.groupBy(*keys).agg(F.first("tags").alias("tags"))
     old_1h = build_rollup(base, keys, H).join(dim, keys)
     old_1d = rollup_daily_from_hourly(old_1h, keys).join(dim, keys)
@@ -446,3 +446,174 @@ def test_splice_plan_prunes_to_exactly_invalid_partitions(spark, tmp_path):
         assert math.isclose(spliced[k], truth[k]), k
     assert math.isclose(spliced[0], stale[0])  # valid days: rollup rows
     assert math.isclose(spliced[48 * H], stale[48 * H])
+
+
+# --- one plan, one collect: rank rule, job budget, tag metadata --------------
+
+SCHEMA = "metric string, ts long, value double, tags map<string,string>, seq long"
+
+
+def test_topn_matches_top_bottom_n(spark):
+    """Planner topN/bottomN and operators.topn.top_bottom_n apply one rank
+    rule: max (top) / min (bottom) of a series' last 3 points, ties by
+    series key. The frame has tied keys (a and b rank 5 top; a and c rank
+    1 bottom), a NaN among c's last 3 points (NaN orders above every
+    number), a point outside b's last 3 that must not count, and series
+    with fewer than 3 points (d has 2, e has 1)."""
+    from ticktock_spark.operators.topn import top_bottom_n
+    from ticktock_spark.plans.planner import SERIES_KEY
+
+    nan = float("nan")
+    points = {
+        "a": [1.0, 5.0, 2.0],
+        "b": [100.0, 5.0, 0.0, 0.0],
+        "c": [nan, 1.0, 1.0],
+        "d": [4.0, 3.0],
+        "e": [2.0],
+    }
+    rows, seq = [], 0
+    for host, vals in points.items():
+        for i, v in enumerate(vals):
+            rows.append(("m", i * 60_000, v, {"host": host}, seq))
+            seq += 1
+    ctx = TsdbContext(spark.createDataFrame(rows, SCHEMA))
+    order = {"top": ["c", "a", "b", "d", "e"], "bottom": ["b", "a", "c", "e", "d"]}
+    for mode in ("top", "bottom"):
+        for n in range(1, 6):
+            spec = parse_m_expr(f"{mode}{n}:m{{host=*}}")
+            got = ctx.execute(_top(spec))
+            ds, _ = ctx._downsampled_series(spec, 0, 7_200_000, [])
+            ref = top_bottom_n(ds, [SERIES_KEY], n, mode).collect()
+            ref_hosts = {r["__tags"]["host"] for r in ref}
+            assert {rs.tags["host"] for rs in got} == ref_hosts == set(order[mode][:n]), (mode, n)
+            for rs in got:
+                want = sorted(
+                    (r["ts"], r["value"]) for r in ref if r["__tags"]["host"] == rs.tags["host"]
+                )
+                assert [(t, repr(v)) for t, v in rs.dps.items()] == [
+                    (t, repr(v)) for t, v in want
+                ]
+
+
+def _cached_rollup_ctx(spark):
+    """Three days of 10-minute points on three hosts whose hours alternate
+    between two dcs, as a raw-only context and as one with rollups built
+    and cached the way TsdbStore.materialize_rollups serves them."""
+    rows = [
+        ("m", (d * 24 + h) * H + k * 600_000, float(h % 7) + d + k,
+         {"host": f"h{h % 3}", "dc": "east" if h % 2 else "west"}, (d * 24 + h) * 6 + k)
+        for d in range(3) for h in range(24) for k in range(6)
+    ]
+    ctx = TsdbContext(spark.createDataFrame(rows, SCHEMA))
+    raw = TsdbContext(ctx.datapoints)
+    ctx.materialize_rollups()
+    ctx.rollup_1h, ctx.rollup_1d = ctx.rollup_1h.cache(), ctx.rollup_1d.cache()
+    ctx.rollup_1h.count(), ctx.rollup_1d.count()
+    return raw, ctx
+
+
+# Spark jobs per sub-query (each AQE shuffle stage is a job of its own).
+# Budgets may only go down; none may exceed 5.
+JOB_BUDGET = {
+    "per_series": 2,
+    "aggregated": 4,
+    "topn": 2,
+    "0all_percentile": 4,
+    "fill": 4,
+    "rollup_served": 4,
+    "splice": 5,
+}
+
+
+def test_query_shapes_stay_in_job_budget_and_leave_no_state(spark):
+    """Each query shape answers from one plan and one collect: its jobs,
+    counted under a job group set in this thread, stay within JOB_BUDGET,
+    and it leaves no persisted RDD and no CacheManager entry behind."""
+    raw, rolled = _cached_rollup_ctx(spark)
+    spliced = TsdbContext(
+        rolled.datapoints, rolled.rollup_1h, rolled.rollup_1d, {"1970-01-02"}
+    )
+    shapes = {
+        "per_series": (raw, "none:m{host=*}"),
+        "aggregated": (raw, "sum:m{dc=*}"),
+        "topn": (raw, "top2:1h-avg:m{host=*}"),
+        "0all_percentile": (raw, "sum:0all-p50:m{dc=*}"),
+        "fill": (raw, "sum:2h-avg-zero:m{dc=*}"),
+        "rollup_served": (rolled, "sum:1h-avg:m{dc=*}"),
+        "splice": (spliced, "sum:1h-avg:m{dc=*}"),
+    }
+    assert set(shapes) == set(JOB_BUDGET) and max(JOB_BUDGET.values()) <= 5
+    sc = spark.sparkContext
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+
+    def state():
+        return sorted(sc._jsc.getPersistentRDDs().keys()), int(field.get(cm).size())
+
+    try:
+        for name, (ctx, m) in shapes.items():
+            before = state()
+            group = f"job-budget-{name}"
+            sc.setJobGroup(group, name)
+            try:
+                got = ctx.execute(_top(parse_m_expr(m), end=72 * H))
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert got, name
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            assert jobs <= JOB_BUDGET[name], (name, jobs)
+            assert state() == before, name
+    finally:
+        rolled.rollup_1h.unpersist()
+        rolled.rollup_1d.unpersist()
+
+
+AGG_TAG_ROWS = [
+    ("cpu", 0, 1.0, {"host": "a", "dc": "east", "rack": "r1"}, 1),
+    ("cpu", 60_000, 3.0, {"host": "a", "dc": "east", "rack": "r1"}, 2),
+    ("cpu", 0, 5.0, {"rack": "r1", "host": "b", "dc": "east"}, 3),
+    ("cpu", 60_000, 7.0, {"rack": "r1", "host": "b", "dc": "east"}, 4),
+    ("cpu", 0, 2.0, {"host": "e", "dc": "north", "rack": "r3"}, 5),
+    ("cpu", 120_000, 4.0, {"dc": "north", "host": "f"}, 6),  # no rack
+    ("cpu", 0, 100.0, {"host": "c", "dc": "west", "rack": "r2"}, 7),
+]
+
+# tags/aggregateTags exactly as the planner emitted them before the
+# one-collect rewrite, in response order and key order
+GROUPED_TAGS = (
+    '[[{"dc":"east","rack":"r1"},["host"]],'
+    '[{"dc":"north"},["host","rack"]],'
+    '[{"dc":"west","host":"c","rack":"r2"},[]]]'
+)
+
+
+def _tag_json(results) -> str:
+    import json
+
+    return json.dumps([[rs.tags, rs.aggregate_tags] for rs in results], separators=(",", ":"))
+
+
+@pytest.mark.parametrize(
+    "m, want",
+    [
+        # members differ in a non-grouping tag (east: host), a member
+        # lacks a tag the others have (north: f has no rack)
+        ("sum:cpu{dc=*}", GROUPED_TAGS),
+        # fill gap rows carry NULL __tags; they add no member
+        ("sum:2m-avg-zero:cpu{dc=*}", GROUPED_TAGS),
+        ("sum:cpu", '[[{},["dc","host","rack"]]]'),
+        (
+            "none:2m-avg-zero:cpu{dc=*}",
+            '[[{"host":"a","rack":"r1","dc":"east"},[]],'
+            '[{"host":"b","rack":"r1","dc":"east"},[]],'
+            '[{"host":"e","rack":"r3","dc":"north"},[]],'
+            '[{"host":"f","dc":"north"},[]],'
+            '[{"host":"c","rack":"r2","dc":"west"},[]]]',
+        ),
+    ],
+)
+def test_aggregate_tags_parity(spark, m, want):
+    ctx = TsdbContext(spark.createDataFrame(AGG_TAG_ROWS, SCHEMA))
+    got = ctx.execute(_top(parse_m_expr(m), end=360_000))
+    assert _tag_json(got) == want

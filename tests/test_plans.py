@@ -248,8 +248,9 @@ def test_minhash_xxh64_scan_side_is_native(spark):
 def test_series_key_lockstep_randomized(spark):
     """schema.series_key/series_tsuid (Python) and series_dim_from
     (Spark expressions) must canonicalize identically for any
-    OpenTSDB-legal metric/tag charset — 300 seeded-random series incl.
-    empty tag sets, single tags, and sort-order-sensitive key sets."""
+    OpenTSDB-legal metric/tag charset plus the escaped delimiters — 300
+    seeded-random series incl. empty tag sets, single tags, and
+    sort-order-sensitive key sets."""
     import random
 
     from pyspark.sql import Row
@@ -262,7 +263,9 @@ def test_series_key_lockstep_randomized(spark):
     )
 
     rng = random.Random(42)
-    alphabet = "abcdefghijklmnopqrstuvwxyz0123456789._-/"
+    # the escaped delimiters (backslash, comma, equals) are in the
+    # alphabet: the Python and the Spark key must escape them alike
+    alphabet = "abcdefghijklmnopqrstuvwxyz0123456789._-/\\,="
 
     def word():
         return "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 10)))

@@ -760,7 +760,7 @@ def test_streaming_zscore_matches_batch(spark, tmp_path):
         [(r["metric"], r["ts"], r["value"], r["tags"]) for r in rows],
         "metric string, ts long, value double, tags map<string,string>",
     ).select(
-        canonical_series_key(F.col("tags")).alias("series"), "ts", "value"
+        canonical_series_key().alias("series"), "ts", "value"
     )
     exp = {
         (r["series"], r["ts"]): (r["roll_n"], r["roll_mean"], r["roll_std"], r["zscore"])
@@ -858,7 +858,7 @@ def test_streaming_soak_20_batches_state_bounded(spark, tmp_path):
     batch = spark.createDataFrame(
         [("m", ts, v, {"h": h}) for h, ts, v in kept],
         "metric string, ts long, value double, tags map<string,string>",
-    ).select(canonical_series_key(F.col("tags")).alias("series"), "ts", "value")
+    ).select(canonical_series_key().alias("series"), "ts", "value")
     exp = {
         (r["series"], r["ts"]): (r["roll_n"], r["roll_mean"], r["roll_std"], r["zscore"])
         for r in rolling_zscore(batch, ["series"], window_ms=3000).collect()

@@ -93,7 +93,7 @@ def _per_series(df: DataFrame) -> DataFrame:
         F.concat(
             F.col("metric"),
             F.lit("{"),
-            canonical_series_key(F.col("tags")),
+            canonical_series_key(),
             F.lit("}"),
         ),
     ).withColumn("tags", F.lit(None).cast(_MAP_T))

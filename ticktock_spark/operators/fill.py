@@ -7,12 +7,13 @@ query range: start stepped UP to the next bucket boundary, end stepped
 down, plus the trailing partial bucket (down.cpp:96-105,235-240,
 `include/down.h:76-82`).
 
-Spark: generate the bucket spine with ``sequence()`` per series (an
-``explode`` of an in-memory array — no shuffle), then a left join from
-spine to data on (series, bucket). The join key includes the series so it
-co-partitions with the downsample output; at scale the spine side is
-#series × #buckets rows, exactly the output size, so this adds one shuffle
-of output-sized data at most — and AQE broadcasts it when small.
+Spark: one aggregation per series gathers its rows into a ts → row map,
+then the bucket spine is generated with ``sequence()`` per series (an
+``explode`` of an in-memory array — no shuffle) and each spine bucket
+looks its row up in the map. There is no self-join: the input is read
+once, and when it is already partitioned on the series (the planner's
+per-series frame) the aggregation adds no shuffle either. At scale the
+map holds one series' buckets, #buckets entries — exactly its output size.
 """
 
 from __future__ import annotations
@@ -34,7 +35,10 @@ def fill_buckets(
     ts_col: str = "ts",
     value_col: str = "value",
 ) -> DataFrame:
-    """Left-join a complete bucket spine over [start, end] per series.
+    """A complete bucket spine over [start, end] per series, each bucket
+    holding the series' row at that ts or the fill value; rows outside
+    the spine are dropped. ``df`` holds at most one row per (series, ts),
+    as a downsample emits.
 
     ``policy``: 'zero' → 0.0, 'nan' → NaN, 'null' → NULL, 'none' → no-op.
     """
@@ -44,14 +48,16 @@ def fill_buckets(
     last = end_ms - end_ms % interval_ms
     if first > last:
         return df
-    series = df.select(*series_cols).distinct()
-    spine = series.withColumn(
-        ts_col,
-        F.explode(
-            F.sequence(F.lit(first), F.lit(last), F.lit(interval_ms)).cast("array<long>")
-        ),
+    # each series' rows as one ts → row map, looked up along the spine:
+    # one aggregation on the series, no self-join of the input
+    others = [c for c in df.columns if c not in (*series_cols, ts_col)]
+    by_ts = df.groupBy(*series_cols).agg(
+        F.map_from_entries(F.collect_list(F.struct(ts_col, F.struct(*others)))).alias("__by_ts")
     )
-    out = spine.join(df, on=[*series_cols, ts_col], how="left")
+    spine = F.sequence(F.lit(first), F.lit(last), F.lit(interval_ms)).cast("array<long>")
+    out = by_ts.select(*series_cols, F.explode(spine).alias(ts_col), "__by_ts")
+    row = F.col("__by_ts")[F.col(ts_col)]
+    out = out.select(*series_cols, ts_col, *[row[c].alias(c) for c in others])
     if policy == "zero":
         fill_val = F.lit(0.0)
     elif policy == "nan":

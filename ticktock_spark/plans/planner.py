@@ -16,12 +16,21 @@ dedup — are explicit steps here.
 
 Series identity: the canonical sorted "k=v,..." tag string (same as the
 reference's canonical tag string, `include/tag.h:46-132`). Grouping-tag
-VALUES are materialized as columns before aggregation so both groupBys
-stay plain hash aggregations.
+VALUES are materialized as columns before aggregation so the groupBys
+stay plain aggregations on columns.
 
-Scale notes: result assembly collects only aggregated result sets and a
-distinct series-metadata list (bounded by series cardinality), never raw
-points. Everything before that is distributed.
+One pass per sub-query, as the reference answers it in one pass
+(`query.cpp:556-570`): the scanned rows are hash-partitioned on the
+series key once, so dedup, downsample, fill and the per-series grouping
+need no further exchange, and the sub-query's result sets come out of ONE
+plan with ONE collect. Each collected row is one result set: its points
+and the tag metadata the response needs — the series' tag map for
+per-series output (``none``, ``topN``/``bottomN``, ranked in the same
+plan), each group's distinct member tag maps for aggregated output. No
+frame is stored between jobs and no second job derives the metadata.
+
+Scale notes: the collect returns only the response's result sets, never
+raw points of aggregated queries. Everything before it is distributed.
 """
 
 from __future__ import annotations
@@ -41,38 +50,31 @@ from ticktock_spark.operators.rollup import (
     ROLLUP_FUNCS,
     snap_interval,
 )
-from ticktock_spark.operators.topn import top_bottom_n
+from ticktock_spark.operators.topn import rank_order, series_rank_key
 from ticktock_spark.plans.spec import QuerySpec, TopLevelQuery
 from ticktock_spark.plans.tagfilter import compile_tag_filters
+from ticktock_spark.schema import tag_string_sql
 
 SERIES_KEY = "__series"
 
 
-def _escape_tag_part(c: F.Column) -> F.Column:
-    """Backslash-escape ``\\``, ``,`` and ``=`` so the joined key is
-    injective; strings without them pass through unchanged. The
-    ``contains`` guard keeps the regex off the common escape-free path:
-    grouping 2M three-tag maps by the key at local[4] cost +20% over
-    the unescaped key with the guard, +70% without it."""
-    special = c.contains("\\") | c.contains(",") | c.contains("=")
-    return F.when(special, F.regexp_replace(c, r"([\\,=])", r"\\$1")).otherwise(c)
-
-
-def canonical_series_key(tags_col: F.Column) -> F.Column:
-    """Sorted 'k=v,k=v' canonical tag string (series identity). Keys and
-    values are escaped (``_escape_tag_part``), so ``{a: '1,b=2'}`` and
+def canonical_series_key() -> F.Column:
+    """Sorted 'k=v,k=v' canonical tag string (series identity) of the
+    ``tags`` column. Keys and values are escaped
+    (``schema.escaped_tag_part_sql``), so ``{a: '1,b=2'}`` and
     ``{a: '1', b: '2'}`` get different keys; the api's
     ``_split_series_label`` decodes the same rule."""
-    entries = F.array_sort(F.map_entries(tags_col))
-    return F.concat_ws(
-        ",",
-        F.transform(
-            entries,
-            lambda e: F.concat_ws(
-                "=", _escape_tag_part(e["key"]), _escape_tag_part(e["value"])
-            ),
-        ),
-    )
+    return F.expr(tag_string_sql("array_sort(map_entries(tags))"))
+
+
+def _by_series(df: DataFrame) -> DataFrame:
+    """``df`` with its SERIES_KEY, hash-partitioned on it. Every later
+    aggregation of a query's per-series frame groups by the series key
+    plus more (dedup, downsample, fill, the per-series result rows), and a
+    hash partitioning on the key alone satisfies them all: one exchange of
+    the scanned rows instead of one per aggregation — under AQE each
+    exchange is a Spark job of its own."""
+    return df.withColumn(SERIES_KEY, canonical_series_key()).repartition(SERIES_KEY)
 
 
 def _series_rollup(
@@ -127,7 +129,7 @@ class TsdbContext:
     def materialize_rollups(self) -> None:
         # one scan of the base: the tag map rides inside both aggregations
         # (see _series_rollup) instead of a series-dim scan joined onto each
-        base = self.datapoints.withColumn(SERIES_KEY, canonical_series_key(F.col("tags")))
+        base = self.datapoints.withColumn(SERIES_KEY, canonical_series_key())
         self.rollup_1h = _series_rollup(base, "ts", HOUR_MS, *_point_aggs())
         self.rollup_1d = _series_rollup(
             self.rollup_1h, "bucket_ts", DAY_MS,
@@ -175,7 +177,7 @@ class TsdbContext:
             pred = pred & compile_tag_filters(F.col("tags"), spec.tags, spec.explicit_tags)
         scan = table.filter(pred)
         if "dt" in table.columns:
-            # persisted rollup tables (maintenance.persisted_rollup_1h) are
+            # on-disk rollup tables (the maintenance module's parquet) are
             # day-partitioned: the redundant dt bound turns the ts range
             # into partition pruning, mirroring _base_scan's dt filter
             scan = scan.filter(
@@ -200,7 +202,7 @@ class TsdbContext:
         on the `dt` partition column, so at scale it scans only the
         invalidated days — everything else stays on the rollup table."""
         invalid = sorted(self.rollup_invalid_dts)
-        # on a persisted (day-partitioned) rollup table the NOT-IN over the
+        # on an on-disk (day-partitioned) rollup table the NOT-IN over the
         # dt partition column is partition pruning; unpartitioned in-memory
         # rollups fall back to deriving the day from bucket_ts
         bucket_day = (
@@ -216,8 +218,7 @@ class TsdbContext:
             if "dt" in raw.columns
             else F.to_date(F.timestamp_millis(F.col("ts")))
         )
-        raw = raw.filter(day_col.isin(invalid))
-        raw = raw.withColumn(SERIES_KEY, canonical_series_key(F.col("tags")))
+        raw = _by_series(raw.filter(day_col.isin(invalid)))
         if "seq" in raw.columns:
             raw = dedup_last_wins(raw, ["metric", SERIES_KEY], seq_col="seq")
         re_agg = _series_rollup(raw, "ts", unit, *_point_aggs())
@@ -263,7 +264,9 @@ class TsdbContext:
             routed = self._rollup_scan(spec, start_ms, end_ms, interval_ms, func)
             if routed is not None:
                 table, snapped = routed
-                grp = table.withColumns(
+                # one exchange on the series key serves this groupBy and
+                # the per-series result grouping (see _by_series)
+                grp = table.repartition(SERIES_KEY).withColumns(
                     {c: F.col("tags").getItem(k) for c, k in gcols.items()}
                 ).groupBy(
                     SERIES_KEY,
@@ -290,8 +293,7 @@ class TsdbContext:
                     out = grp.agg(F.sum("sum").cast("double").alias("value"), tags_agg)
                 return out, True
 
-        base = self._base_scan(spec, start_ms, end_ms)
-        base = base.withColumn(SERIES_KEY, canonical_series_key(F.col("tags")))
+        base = _by_series(self._base_scan(spec, start_ms, end_ms))
         if "seq" in base.columns:
             base = dedup_last_wins(base, ["metric", SERIES_KEY], seq_col="seq")
         base = base.withColumns({c: F.col("tags").getItem(k) for c, k in gcols.items()})
@@ -355,64 +357,47 @@ class TsdbContext:
         if agg.startswith(("top", "bottom")) and agg[-1].isdigit():
             topn_mode = ("top" if agg.startswith("top") else "bottom", int(agg.lstrip("topbtm") or agg[-1]))
 
-        ds, did_ds = self._downsampled_series(spec, top.start_ms, top.end_ms, group_keys)
+        ds, _ = self._downsampled_series(spec, top.start_ms, top.end_ms, group_keys)
         gcols = [c for c in ds.columns if c.startswith("__g")]
 
-        # ONE scan of the base table per query: the per-series frame
-        # (#series × #buckets rows — bounded by the result size, never raw
-        # points for downsampled queries) is persisted so the result
-        # aggregation and the series-metadata derivation both read it
-        # instead of re-running the scan+downsample lineage.
-        from pyspark.storagelevel import StorageLevel
-
-        ds = ds.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            per_series = agg == "none" or topn_mode is not None
-            if per_series:
-                if topn_mode is not None:
-                    mode, n = topn_mode
-                    ds_sel = top_bottom_n(
-                        ds, [SERIES_KEY], n, mode, materialize=False
-                    )
-                else:
-                    ds_sel = ds
-                result_df = ds_sel.select(SERIES_KEY, "ts", "value")
-                key_cols = [SERIES_KEY]
-            else:
-                result_df = ds.groupBy(*gcols, "ts").agg(
-                    aggregator_expr(agg).alias("value")
-                )
-                key_cols = gcols
-
-            # series metadata (tags maps) — tiny, bounded by series
-            # cardinality; read from the persisted frame, not a re-scan
-            # driver-bound: one tags row per series (dimension-scale)
-            meta_rows = (
-                ds.groupBy(SERIES_KEY)
-                .agg(F.first("__tags", ignorenulls=True).alias("tags"))
-                .collect()
+        # ONE plan and ONE collect per sub-query: every output row is one
+        # result set carrying its points and the tag metadata it needs, so
+        # the per-series frame is computed once, by this one job chain.
+        points = F.collect_list(F.struct("ts", "value")).alias("points")
+        per_series = agg == "none" or topn_mode is not None
+        if per_series:
+            # first non-NULL tag map: fill gap rows carry NULL __tags
+            result = ds.groupBy(SERIES_KEY).agg(
+                points, F.first("__tags", ignorenulls=True).alias("tags")
             )
-            meta = {r[SERIES_KEY]: dict(r["tags"] or {}) for r in meta_rows}
-            # driver-bound: the query's result rows — the response payload itself
-            rows = result_df.collect()
-        finally:
-            ds.unpersist()
-        groups: dict[tuple, dict[int, float]] = {}
-        for r in rows:
-            key = tuple(r[c] for c in key_cols)
-            groups.setdefault(key, {})[int(r["ts"])] = r["value"]
+            if topn_mode is not None:
+                mode, n = topn_mode
+                key = series_rank_key(F.col("points"), mode)
+                result = result.orderBy(rank_order(key, mode), SERIES_KEY).limit(n)
+        else:
+            # each group's distinct member tag maps ride through both
+            # aggregations as sorted entry arrays (a map is not
+            # groupable); NULL gap-row maps drop out of collect_set
+            per_ts = ds.groupBy(*gcols, "ts").agg(
+                aggregator_expr(agg).alias("value"),
+                F.array_sort(
+                    F.collect_set(F.array_sort(F.map_entries("__tags")))
+                ).alias("members"),
+            )
+            result = per_ts.groupBy(*gcols).agg(
+                points,
+                F.array_distinct(F.flatten(F.collect_set("members"))).alias("members"),
+            )
+        # driver-bound: the query's result sets — the response payload itself
+        rows = result.collect()
 
         results: list[ResultSet] = []
-        for key, dps in groups.items():
+        for r in rows:
+            dps = {int(ts): v for ts, v in r["points"]}
             if per_series:
-                series_tags = meta.get(key[0], {})
-                tags_out, agg_tags = dict(series_tags), []
+                tags_out, agg_tags = dict(r["tags"] or {}), []
             else:
-                members = [
-                    t
-                    for sk, t in meta.items()
-                    if all(t.get(k) == v for k, v in zip(group_keys, key))
-                ]
+                members = [{e["key"]: e["value"] for e in m} for m in r["members"]]
                 tags_out, agg_tags = _merge_member_tags(members)
             if spec.rate:
                 dps = _rate_py(dps, spec.rate_options)

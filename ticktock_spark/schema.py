@@ -57,10 +57,18 @@ SERIES_SCHEMA = T.StructType(
 )
 
 
+_TAG_ESCAPES = str.maketrans({"\\": "\\\\", ",": "\\,", "=": "\\="})
+
+
 def series_key(metric: str, tags: dict | None) -> str:
     """Canonical series key: ``metric;k1=v1,k2=v2`` with keys sorted —
-    same identity the reference's Mapping keeps (tsdb.cpp:679-715)."""
-    body = ",".join(f"{k}={v}" for k, v in sorted((tags or {}).items()))
+    same identity the reference's Mapping keeps (tsdb.cpp:679-715). Tag
+    keys and values are escaped like :func:`escaped_tag_part_sql`, so
+    ``{a: '1,b=2'}`` and ``{a: '1', b: '2'}`` are two series."""
+    body = ",".join(
+        f"{k.translate(_TAG_ESCAPES)}={v.translate(_TAG_ESCAPES)}"
+        for k, v in sorted((tags or {}).items())
+    )
     return f"{metric};{body}"
 
 
@@ -71,31 +79,43 @@ def series_tsuid(skey: str) -> str:
     return hashlib.md5(skey.encode()).hexdigest()[:12]
 
 
-def series_entries_col():
-    """Sorted ``map_entries(tags)`` with NULL tags canonicalized like ``{}``
-    (matching the Python twin — concat_ws would otherwise skip the NULL
-    segment)."""
-    from pyspark.sql import functions as F
+def escaped_tag_part_sql(x: str) -> str:
+    """SQL for the tag key or value ``x`` with ``\\``, ``,`` and ``=``
+    backslash-escaped, so a joined tag string is injective; strings
+    without them pass through unchanged. The ``contains`` guard keeps the
+    regex off the common escape-free path: grouping 2M three-tag maps by
+    the key at local[4] cost +20% over the unescaped key with the guard,
+    +70% without it. Series-key expressions are SQL strings rather than
+    Column-API trees: one parse in the JVM instead of ~80 py4j calls
+    (~40 ms) per query plan."""
+    special = f"contains({x}, '\\\\') OR contains({x}, ',') OR contains({x}, '=')"
+    return (
+        f"CASE WHEN {special} "
+        f"THEN regexp_replace({x}, '([\\\\\\\\,=])', '\\\\\\\\$1') ELSE {x} END"
+    )
 
-    return F.array_sort(F.map_entries(F.coalesce("tags", F.expr("map()"))))
+
+def tag_string_sql(entries: str) -> str:
+    """SQL for the ``k=v,k=v`` string of a sorted ``map_entries`` array,
+    keys and values escaped by :func:`escaped_tag_part_sql`."""
+    pair = (
+        f"concat_ws('=', {escaped_tag_part_sql('e.key')}, {escaped_tag_part_sql('e.value')})"
+    )
+    return f"concat_ws(',', transform({entries}, e -> {pair}))"
 
 
-def series_skey_col(entries=None):
+# sorted map_entries(tags), NULL tags canonicalized like {} (matching the
+# Python twin — concat_ws would otherwise skip the NULL segment)
+_SERIES_ENTRIES_SQL = "array_sort(map_entries(coalesce(tags, map())))"
+
+
+def series_skey_col():
     """Spark expression for the canonical series key (`metric;k=v,...`),
     lockstep with :func:`series_key` (pinned by the randomized test in
     tests/test_plans.py::test_series_key_lockstep_randomized)."""
     from pyspark.sql import functions as F
 
-    if entries is None:
-        entries = series_entries_col()
-    return F.concat_ws(
-        ";",
-        F.col("metric"),
-        F.array_join(
-            F.transform(entries, lambda e: F.concat_ws("=", e["key"], e["value"])),
-            ",",
-        ),
-    )
+    return F.expr(f"concat_ws(';', metric, {tag_string_sql(_SERIES_ENTRIES_SQL)})")
 
 
 def series_dim_from(df):
@@ -105,10 +125,10 @@ def series_dim_from(df):
     — the two must stay in lockstep."""
     from pyspark.sql import functions as F
 
-    entries = series_entries_col()
-    skey = series_skey_col(entries)
     return (
-        df.select("metric", entries.alias("te"), skey.alias("skey"))
+        df.select(
+            "metric", F.expr(_SERIES_ENTRIES_SQL).alias("te"), series_skey_col().alias("skey")
+        )
         .dropDuplicates(["skey"])
         .select(
             "metric",

@@ -121,7 +121,7 @@ def streaming_zscore(
 
     keyed = dps.select(
         "metric",
-        canonical_series_key(F.col("tags")).alias("series"),
+        canonical_series_key().alias("series"),
         "ts",
         "value",
     )

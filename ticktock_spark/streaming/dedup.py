@@ -28,7 +28,7 @@ def streaming_dedup_last_wins(dps: DataFrame, watermark: str = "2 hours") -> Dat
     keyed = dps.withColumns(
         {
             "event_time": F.timestamp_millis(F.col("ts")),
-            "series": canonical_series_key(F.col("tags")),
+            "series": canonical_series_key(),
         }
     ).withWatermark("event_time", watermark)
     return (

@@ -123,7 +123,7 @@ def streaming_rate(
 
     keyed = dps.select(
         "metric",
-        canonical_series_key(F.col("tags")).alias("series"),
+        canonical_series_key().alias("series"),
         "ts",
         "value",
     )

@@ -22,7 +22,7 @@ def streaming_rollup_1h(dps: DataFrame, watermark: str = "2 hours") -> DataFrame
     with_ts = dps.withColumns(
         {
             "event_time": F.timestamp_millis(F.col("ts")),
-            "__series": canonical_series_key(F.col("tags")),
+            "__series": canonical_series_key(),
         }
     ).withWatermark("event_time", watermark)
     win = F.window("event_time", "1 hour")
