@@ -213,29 +213,42 @@ def test_0all_percentile_routes_distributed(spark):
     assert "Window" in plan
 
 
-def test_rollup_routing_matches_raw(spark):
-    # hourly data across 3 days; rollup-routed 1d-avg must equal raw-path
+@pytest.mark.parametrize("interval", ["1h", "1d"])
+@pytest.mark.parametrize("func", ["avg", "count", "min", "max", "sum"])
+def test_rollup_routing_matches_raw(spark, monkeypatch, func, interval):
+    """Every rollup-served downsample function, routed to the 1h and to
+    the 1d rollup, equals the raw path. Three points per hour across 3
+    days, so each hourly rollup row folds several points."""
     rows = []
     seq = 0
     for d in range(3):
         for h in range(24):
-            ts = (d * 24 + h) * H
-            rows.append(("m", ts, float(h % 7) + d, {"host": "x"}, seq))
-            seq += 1
+            for k in range(3):
+                ts = (d * 24 + h) * H + k * 1_200_000
+                rows.append(("m", ts, float((h + 2 * k) % 7) + d, {"host": "x"}, seq))
+                seq += 1
     df = spark.createDataFrame(
         rows, "metric string, ts long, value double, tags map<string,string>, seq long"
     )
     ctx = TsdbContext(df)
-    top = TopLevelQuery(0, 3 * 24 * H, True, None, [parse_m_expr("none:1d-avg:m{host=x}")])
+    m = f"none:{interval}-{func}:m{{host=x}}"
+    top = TopLevelQuery(0, 3 * 24 * H, True, None, [parse_m_expr(m)])
     raw = ctx.execute(top)
     ctx.materialize_rollups()
-    routed = ctx.execute(top)
-    assert routed[0].dps.keys() == raw[0].dps.keys()
+
+    def no_raw_scan(self, *a, **k):
+        raise AssertionError("raw table scanned despite rollup routing")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(TsdbContext, "_base_scan", no_raw_scan)
+        routed = ctx.execute(top)
+    assert routed[0].dps.keys() == raw[0].dps.keys() and len(raw[0].dps) > 1
     for k in raw[0].dps:
         assert math.isclose(routed[0].dps[k], raw[0].dps[k]), k
     # ROLLUP_RAW forces the raw path even with rollups materialized
     top_raw = TopLevelQuery(
-        0, 3 * 24 * H, True, None, [parse_m_expr("none:rollupUsage=ROLLUP_RAW:1d-avg:m{host=x}")]
+        0, 3 * 24 * H, True, None,
+        [parse_m_expr(f"none:rollupUsage=ROLLUP_RAW:{interval}-{func}:m{{host=x}}")],
     )
     assert ctx.execute(top_raw)[0].dps == raw[0].dps
 
@@ -525,7 +538,7 @@ JOB_BUDGET = {
 }
 
 
-def test_query_shapes_stay_in_job_budget_and_leave_no_state(spark):
+def test_query_shapes_stay_in_job_budget_and_leave_no_state(spark, state):
     """Each query shape answers from one plan and one collect: its jobs,
     counted under a job group set in this thread, stay within JOB_BUDGET,
     and it leaves no persisted RDD and no CacheManager entry behind."""
@@ -544,13 +557,6 @@ def test_query_shapes_stay_in_job_budget_and_leave_no_state(spark):
     }
     assert set(shapes) == set(JOB_BUDGET) and max(JOB_BUDGET.values()) <= 5
     sc = spark.sparkContext
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    field = cm.getClass().getDeclaredField("cachedData")
-    field.setAccessible(True)
-
-    def state():
-        return sorted(sc._jsc.getPersistentRDDs().keys()), int(field.get(cm).size())
-
     try:
         for name, (ctx, m) in shapes.items():
             before = state()

@@ -7,6 +7,8 @@ into a shuffle join should fail loudly, not just run slower.
 
 from __future__ import annotations
 
+import pytest
+
 import ticktock_spark.pipeline.queries  # noqa: F401
 from ticktock_spark.queries import QUERIES
 
@@ -45,10 +47,27 @@ def test_star_join_broadcasts_dims(spark):
     assert "GreaterThanOrEqual(o_orderdate" in plan
 
 
-def test_topn_broadcast_semi_join(spark):
+def test_topn_single_scan_no_join_no_cache(spark):
+    """top_bottom_n ranks and keeps the N series' rows in one per-series
+    aggregation: one parquet scan, no join back to its input and no
+    persisted input."""
+    import re
+
     plan = _plan(spark, "q10_top3_series")
-    assert "LeftSemi" in plan and "BroadcastHashJoin" in plan
-    assert "InMemoryTableScan" in plan or "InMemoryRelation" in plan  # materialized once
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
+    assert "Join" not in plan
+    assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1
+
+
+@pytest.mark.parametrize("name", ["q10_top3_series", "q25_bottom3_series"])
+def test_topn_leaves_no_state(spark, state, name):
+    """top_bottom_n (q10 top3, q25 bottom3) persists nothing: once its
+    frame is collected, and while the frame is still referenced, the
+    session has no new persisted RDD and no new CacheManager entry."""
+    before = state()
+    df = QUERIES[name](spark, SF)
+    assert df.collect()
+    assert state() == before
 
 
 def test_bpe_token_ids_single_scan_no_shuffle(spark):

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ticktock_spark.operators.correlate import pearson_moments
+from ticktock_spark.operators.rollup import downsample_from_rollup
 from ticktock_spark.plans.planner import ResultSet, canonical_series_key
 from ticktock_spark.plans.parser import _parse_tag_group
 from ticktock_spark.plans.tagfilter import compile_tag_filters
@@ -137,25 +138,6 @@ def _bucket_means(dps: DataFrame, bucket_ms: int) -> DataFrame:
     return exact_bucket_means(dps, ["metric"], bucket_ms)
 
 
-def _bucket_means_rollup(rollup: DataFrame, bucket_ms: int) -> DataFrame:
-    """Per-metric bucket means from a materialized rollup table
-    (ROLLUP_SCHEMA: metric, tags, bucket_ts, cnt, min, max, sum) —
-    Σsum / Σcnt across the metric's series is the mean of the raw
-    points in the bucket. Exactness caveat: ROLLUP_SCHEMA stores sum as
-    an IEEE double while the raw path sums decimal(18,2) exactly, so
-    grain-routed results can differ from a raw scan by floating-point
-    rounding — the rollup path trades that last-ulp exactness for
-    reading |series| × |buckets| rows instead of every raw point (the
-    100 TB path). ``bucket_ms`` must be a multiple of the rollup grain
-    (coarser re-bucketing folds into the same agg)."""
-    return rollup.groupBy(
-        "metric",
-        (F.col("bucket_ts") - F.col("bucket_ts") % F.lit(bucket_ms)).alias("ts"),
-    ).agg(
-        (F.sum("sum") / F.sum("cnt")).alias("value")
-    )
-
-
 def _bucket_source(
     dps: DataFrame,
     rollup: DataFrame | None,
@@ -163,7 +145,16 @@ def _bucket_source(
     bucket_ms: int,
 ) -> DataFrame:
     if rollup is not None:
-        return _bucket_means_rollup(_filtered(rollup, metrics), bucket_ms)
+        # Σsum / Σcnt across the metric's series is the mean of the raw
+        # points in the bucket. Exactness caveat: ROLLUP_SCHEMA stores sum
+        # as an IEEE double while the raw path sums decimal(18,2) exactly,
+        # so grain-routed results can differ from a raw scan by rounding —
+        # the price of reading |series| × |buckets| rows instead of every
+        # raw point (the 100 TB path). ``bucket_ms`` must be a multiple of
+        # the rollup grain.
+        return downsample_from_rollup(
+            _filtered(rollup, metrics), ["metric"], bucket_ms, "avg"
+        )
     return _bucket_means(_filtered(dps, metrics), bucket_ms)
 
 

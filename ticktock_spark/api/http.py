@@ -32,6 +32,7 @@ import itertools
 import json
 import re as _re
 import threading
+import time
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -213,9 +214,7 @@ class TsdbStore:
         Tagged ``host=<hostname>`` like the reference
         (`HOST_TAG_NAME`). Returns the emitted datapoints."""
         import socket
-        import time as _t
-
-        now = int(now_ms if now_ms is not None else _t.time() * 1000)
+        now = int(now_ms if now_ms is not None else time.time() * 1000)
         host = socket.gethostname()
         with self._meter_lock:
             drained = dict(self._meter)
@@ -380,9 +379,7 @@ class TsdbStore:
                 self._buffer.drop_head(n)
             # the cached base-series dim predates the flushed rows; the
             # buffer overlay still covers those series, so rebuild lazily
-            if self._series_base is not None:
-                self._series_base.unpersist()
-                self._series_base = None
+            self.drop_series_dim()
             return n
 
     def purge(self, keep_days: int, today=None) -> list:
@@ -402,12 +399,18 @@ class TsdbStore:
         )
         if purged:
             self.base = self.spark.read.parquet(self.table_path)
-            if self._series_base is not None:
-                self._series_base.unpersist()
-                self._series_base = None
+            self.drop_series_dim()
             if self.rollup_1h is not None or self.rollup_1d is not None:
                 self.materialize_rollups()
         return purged
+
+    def drop_series_dim(self) -> None:
+        """Unpersist the cached base-series dim after ``base`` changed
+        files (flush, purge, compaction); series_dim() rebuilds it lazily
+        from the new base."""
+        if self._series_base is not None:
+            self._series_base.unpersist()
+            self._series_base = None
 
     def context(self) -> TsdbContext:
         return TsdbContext(self.dataframe(), self.rollup_1h, self.rollup_1d)
@@ -481,16 +484,8 @@ class _Handler(BaseHTTPRequestHandler):
             elif route == "/api/search/lookup":
                 self._send(200, self._lookup(params))
             elif route == "/api/query":
-                import time as _t
-
-                t0 = _t.perf_counter()
-                top = parse_query_params(params)
-                results = self.store.context().execute(top)
-                self.store.note_query((_t.perf_counter() - t0) * 1000.0)
-                self._send_query_results(results)
+                self._query(lambda: parse_query_params(params))
             elif route == "/api/analytics/stream":
-                import time as _t
-
                 from ticktock_spark.api import analytics
 
                 if self.store._presence is None:
@@ -503,34 +498,14 @@ class _Handler(BaseHTTPRequestHandler):
                     raise _BadRequest(f"unknown stream op {op!r}")
                 presence, bucket_ms = self.store._presence
                 df = presence() if callable(presence) else presence
-                t0 = _t.perf_counter()
+                t0 = time.perf_counter()
                 results = analytics.stream_gaps_op(
                     df, bucket_ms=bucket_ms, metrics=params.get("m")
                 )
-                self.store.note_query((_t.perf_counter() - t0) * 1000.0)
+                self.store.note_query((time.perf_counter() - t0) * 1000.0)
                 self._send_query_results(results)
             elif route == "/api/analytics":
-                import time as _t
-
-                from ticktock_spark.api import analytics
-
-                t0 = _t.perf_counter()
-                rollups = {
-                    g: df
-                    for g, df in (
-                        ("1h", self.store.rollup_1h),
-                        ("1d", self.store.rollup_1d),
-                    )
-                    if df is not None
-                }
-                try:
-                    results = analytics.execute(
-                        self.store.dataframe(), params, rollups
-                    )
-                except ValueError as e:
-                    raise _BadRequest(str(e)) from e
-                self.store.note_query((_t.perf_counter() - t0) * 1000.0)
-                self._send_query_results(results)
+                self._analytics(params)
             else:
                 self._send(404, {"error": f"no route {route}"})
         except _BadRequest:
@@ -541,6 +516,34 @@ class _Handler(BaseHTTPRequestHandler):
             self._send(503, b"", content_type="text/plain")
         except Exception as e:  # noqa: BLE001 — HTTP boundary
             self._send(500, {"error": str(e)})
+
+    def _query(self, parse) -> None:
+        """/api/query (GET and POST): ``parse()`` → TopLevelQuery, planned
+        and executed on the store's current data; the timing covers parse
+        through execution."""
+        t0 = time.perf_counter()
+        results = self.store.context().execute(parse())
+        self.store.note_query((time.perf_counter() - t0) * 1000.0)
+        self._send_query_results(results)
+
+    def _analytics(self, params: dict[str, list[str]]) -> None:
+        """/api/analytics (GET and POST) on parse_qs-shaped ``params``,
+        served from the store's materialized rollups where the op allows;
+        an op's ValueError is a malformed request (400)."""
+        from ticktock_spark.api import analytics
+
+        t0 = time.perf_counter()
+        rollups = {
+            g: df
+            for g, df in (("1h", self.store.rollup_1h), ("1d", self.store.rollup_1d))
+            if df is not None
+        }
+        try:
+            results = analytics.execute(self.store.dataframe(), params, rollups)
+        except ValueError as e:
+            raise _BadRequest(str(e)) from e
+        self.store.note_query((time.perf_counter() - t0) * 1000.0)
+        self._send_query_results(results)
 
     def _send_query_results(self, results) -> None:
         """Serialize query results; over-cap responses answer 413 with an
@@ -569,9 +572,7 @@ class _Handler(BaseHTTPRequestHandler):
                     dps = [d for d in (parse_put_line(l) for l in text.splitlines()) if d]
                 self._ingest(dps)
             elif route == "/api/write":
-                import time as _t
-
-                now = int(_t.time() * 1000)
+                now = int(time.time() * 1000)
                 dps = []
                 try:
                     for line in body.decode().splitlines():
@@ -585,21 +586,11 @@ class _Handler(BaseHTTPRequestHandler):
                     raise _BadRequest(str(e)) from e
                 self._ingest(dps)
             elif route == "/api/query":
-                import time as _t
-
-                t0 = _t.perf_counter()
-                top = parse_query_json(json.loads(body or b"{}"))
-                results = self.store.context().execute(top)
-                self.store.note_query((_t.perf_counter() - t0) * 1000.0)
-                self._send_query_results(results)
+                self._query(lambda: parse_query_json(json.loads(body or b"{}")))
             elif route == "/api/analytics":
                 # POST twin of the GET route (the /api/query parity):
                 # a JSON object body; scalar values and lists both
                 # accepted, normalized to the GET parse_qs shape
-                import time as _t
-
-                from ticktock_spark.api import analytics
-
                 try:
                     body_params = json.loads(body or b"{}")
                     if not isinstance(body_params, dict):
@@ -610,23 +601,7 @@ class _Handler(BaseHTTPRequestHandler):
                     }
                 except (ValueError, json.JSONDecodeError) as e:
                     raise _BadRequest(str(e)) from e
-                rollups = {
-                    g: df
-                    for g, df in (
-                        ("1h", self.store.rollup_1h),
-                        ("1d", self.store.rollup_1d),
-                    )
-                    if df is not None
-                }
-                t0 = _t.perf_counter()
-                try:
-                    results = analytics.execute(
-                        self.store.dataframe(), norm, rollups
-                    )
-                except ValueError as e:
-                    raise _BadRequest(str(e)) from e
-                self.store.note_query((_t.perf_counter() - t0) * 1000.0)
-                self._send_query_results(results)
+                self._analytics(norm)
             elif route == "/api/admin":
                 self._admin(params)
             else:
@@ -692,9 +667,7 @@ class _Handler(BaseHTTPRequestHandler):
                     self.store.base = self.store.spark.read.parquet(
                         self.store.table_path
                     )
-                    if self.store._series_base is not None:
-                        self.store._series_base.unpersist()
-                        self.store._series_base = None
+                    self.store.drop_series_dim()
             self._send(200, {"compacted": rows})
         elif cmd in ("append", "cp", "gc", "log", "stop"):
             self._send(400, {"error": f"cmd {cmd} not applicable to the Spark runtime"})

@@ -7,25 +7,31 @@ for bottom (`QueryTask::get_max/get_min(3)`, `src/core/query.cpp:858-884`;
 n=3 per `include/query.h:265-279`).
 
 The rank rule lives here once: :func:`series_rank_key` computes the key
-from a series' array of points and :func:`rank_order` orders the
-keys, ties broken by the caller's series columns. Two callers apply it:
+from a series' array of points and :func:`rank_order` orders the keys,
+ties broken by the caller's series columns. The query planner and
+:func:`top_bottom_n` apply it in one plan shape:
 
-- :func:`top_bottom_n`, the distributed operator, computes each series'
-  last-3 tail with a window, ranks the tails, takes the top-N keys (tiny —
-  N ≤ 9) and semi-joins (broadcast) back to keep those series' points. No
-  full sort of the data, no driver collect of points. The input feeds both
-  the rank branch and the semi-join; left as pure lineage Catalyst pushes
-  the semi-join below the left branch's aggregation and re-scans the raw
-  source, so the (#series × #buckets sized) input is persisted once.
-- The query planner groups each series' points into one array anyway (its
-  result rows), so it ranks that array in the same plan and needs neither
-  the window, the join nor the cache.
+  groupBy(series) → (rank key of collect_list(struct(ts, value)),
+                     the series' collected rows)
+    → orderBy(rank_order, series).limit(n)   [TakeOrderedAndProject]
+    → the n series' rows
+
+One scan of the input and one exchange: the input is read once, never
+cached, and nothing is left in the session's CacheManager.
+orderBy().limit(n) plans as TakeOrderedAndProject: each partition keeps
+its local top-n and the driver merges N·#partitions rows, never a
+single-partition exchange of every series key.
+
+Scale note: each series' rows are collected into one array (the planner
+collects them anyway: they are its result sets), so the largest series'
+in-range points must fit in one task's memory — as they must in the
+reference, which holds every result set's points to rank them. The
+driver receives only the N chosen series.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql import Column, DataFrame, functions as F
 
 LAST_K = 3
 
@@ -50,30 +56,16 @@ def rank_order(rank_key: Column, mode: str) -> Column:
     return rank_key.desc() if mode == "top" else rank_key.asc()
 
 
-def top_bottom_n(
-    df: DataFrame,
-    series_cols: list[str],
-    n: int,
-    mode: str = "top",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """The rows of ``df`` that belong to its ``n`` best-ranked series.
-    The persisted input lives until the returned frame is garbage
-    collected (ContextCleaner unpersists it)."""
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    w = Window.partitionBy(*series_cols).orderBy(F.col(ts_col).desc())
-    tail = df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= LAST_K)
-    points = F.collect_list(F.struct(F.col(ts_col).alias("ts"), F.col(value_col).alias("value")))
-    keys = tail.groupBy(*series_cols).agg(series_rank_key(points, mode).alias("__rank_key"))
-    # orderBy().limit(n) plans as TakeOrderedAndProject: each partition
-    # keeps its local top-n and the driver merges N·#partitions rows —
-    # no single-partition exchange of ALL series keys (which a global
-    # Window.orderBy row_number would force; fine at thousands of
-    # series, a straggler at many millions).
-    chosen = (
-        keys.orderBy(rank_order(F.col("__rank_key"), mode), *series_cols)
-        .limit(n)
-        .select(*series_cols)
+def top_bottom_n(df: DataFrame, series_cols: list[str], n: int, mode: str = "top") -> DataFrame:
+    """The rows of ``df`` (with ``ts`` and ``value`` columns) that belong
+    to its ``n`` best-ranked series, in ``df``'s column order. The rank
+    key is computed on ``struct(ts, value)`` only, so ``df`` may carry
+    columns that cannot be ordered (a tag map)."""
+    rest = [c for c in df.columns if c not in series_cols]
+    points = F.collect_list(F.struct("ts", "value"))
+    ranked = df.groupBy(*series_cols).agg(
+        series_rank_key(points, mode).alias("__rank_key"),
+        F.collect_list(F.struct(*rest)).alias("__rows"),
     )
-    return df.join(F.broadcast(chosen), on=series_cols, how="left_semi")
+    chosen = ranked.orderBy(rank_order(F.col("__rank_key"), mode), *series_cols).limit(n)
+    return chosen.select(*series_cols, F.inline("__rows")).select(*df.columns)

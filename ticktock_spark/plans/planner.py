@@ -14,6 +14,13 @@ decisions the reference hand-rolls — rollup routing with interval
 snapping (`query.cpp:1032-1091`), fill-spine generation, and last-wins
 dedup — are explicit steps here.
 
+Operators are defined once and only applied here: the rollup's point
+aggregates, its re-aggregation and the value a rollup serves for
+avg/count/min/max/sum come from operators/rollup.py (which the batch
+and streaming rollup builders use too), the top/bottom-N rank rule from
+operators/topn.py. Datapoint and rollup scans share one predicate and
+`dt`-pruning helper (``_scan``).
+
 Series identity: the canonical sorted "k=v,..." tag string (same as the
 reference's canonical tag string, `include/tag.h:46-132`). Grouping-tag
 VALUES are materialized as columns before aggregation so the groupBys
@@ -43,11 +50,13 @@ from ticktock_spark.operators.downsample import bucket_expr, downsample_agg_expr
 from ticktock_spark.operators.aggregate import aggregator_expr
 from ticktock_spark.operators.dedup import dedup_last_wins
 from ticktock_spark.operators.fill import fill_buckets
-from ticktock_spark.operators.rate import rate as rate_op
 from ticktock_spark.operators.rollup import (
     HOUR_MS,
     DAY_MS,
     ROLLUP_FUNCS,
+    point_aggs,
+    re_aggs,
+    rollup_value_expr,
     snap_interval,
 )
 from ticktock_spark.operators.topn import rank_order, series_rank_key
@@ -90,11 +99,35 @@ def _series_rollup(
     ).agg(*aggs, F.first("tags").alias("tags"))
 
 
-def _point_aggs() -> list[F.Column]:
-    """The rollup aggregates of raw points (cf. operators.rollup.build_rollup)."""
-    v = F.col("value")
-    return [F.count(v).alias("cnt"), F.min(v).alias("min"),
-            F.max(v).alias("max"), F.sum(v).alias("sum")]
+def _scan(
+    table: DataFrame, spec: QuerySpec, ts_col: str, start_ms: int, end_ms: int
+) -> DataFrame:
+    """The rows of ``table`` (datapoints or a rollup) a sub-query reads:
+    its metric, ``ts_col`` within [start_ms, end_ms] and its tag
+    predicates. On a day-partitioned table the redundant `dt` bound turns
+    the time range into partition pruning, mirroring Tsdb::insts binary
+    search (tsdb.cpp:2259-2322)."""
+    pred = (F.col("metric") == spec.metric) & F.col(ts_col).between(start_ms, end_ms)
+    if spec.tags:
+        pred = pred & compile_tag_filters(F.col("tags"), spec.tags, spec.explicit_tags)
+    out = table.filter(pred)
+    if "dt" in table.columns:
+        out = out.filter(
+            F.col("dt").between(
+                F.from_unixtime(F.lit(start_ms // 1000)).cast("date"),
+                F.from_unixtime(F.lit(end_ms // 1000)).cast("date"),
+            )
+        )
+    return out
+
+
+def _day(df: DataFrame, ts_col: str) -> F.Column:
+    """The day partition of each row: the `dt` partition column of an
+    on-disk table (filtering on it is partition pruning), else the UTC day
+    of ``ts_col``."""
+    if "dt" in df.columns:
+        return F.col("dt")
+    return F.to_date(F.timestamp_millis(F.col(ts_col)))
 
 
 @dataclass
@@ -130,31 +163,13 @@ class TsdbContext:
         # one scan of the base: the tag map rides inside both aggregations
         # (see _series_rollup) instead of a series-dim scan joined onto each
         base = self.datapoints.withColumn(SERIES_KEY, canonical_series_key())
-        self.rollup_1h = _series_rollup(base, "ts", HOUR_MS, *_point_aggs())
-        self.rollup_1d = _series_rollup(
-            self.rollup_1h, "bucket_ts", DAY_MS,
-            F.sum("cnt").alias("cnt"), F.min("min").alias("min"),
-            F.max("max").alias("max"), F.sum("sum").alias("sum"),
-        )
+        self.rollup_1h = _series_rollup(base, "ts", HOUR_MS, *point_aggs())
+        self.rollup_1d = _series_rollup(self.rollup_1h, "bucket_ts", DAY_MS, *re_aggs())
 
     # -- planning --
 
     def _base_scan(self, spec: QuerySpec, start_ms: int, end_ms: int) -> DataFrame:
-        df = self.datapoints
-        pred = (F.col("metric") == spec.metric) & F.col("ts").between(start_ms, end_ms)
-        if spec.tags:
-            pred = pred & compile_tag_filters(F.col("tags"), spec.tags, spec.explicit_tags)
-        out = df.filter(pred)
-        if "dt" in df.columns:
-            # redundant with ts but lets Catalyst prune day partitions,
-            # mirroring Tsdb::insts binary search (tsdb.cpp:2259-2322)
-            out = out.filter(
-                F.col("dt").between(
-                    F.from_unixtime(F.lit(start_ms // 1000)).cast("date"),
-                    F.from_unixtime(F.lit(end_ms // 1000)).cast("date"),
-                )
-            )
-        return out
+        return _scan(self.datapoints, spec, "ts", start_ms, end_ms)
 
     def _rollup_scan(
         self, spec: QuerySpec, start_ms: int, end_ms: int, interval_ms: int, func: str
@@ -170,22 +185,9 @@ class TsdbContext:
         if table is None:
             return None
         snapped = snap_interval(interval_ms, unit)
-        pred = (F.col("metric") == spec.metric) & F.col("bucket_ts").between(
-            start_ms, end_ms
-        )
-        if spec.tags:
-            pred = pred & compile_tag_filters(F.col("tags"), spec.tags, spec.explicit_tags)
-        scan = table.filter(pred)
-        if "dt" in table.columns:
-            # on-disk rollup tables (the maintenance module's parquet) are
-            # day-partitioned: the redundant dt bound turns the ts range
-            # into partition pruning, mirroring _base_scan's dt filter
-            scan = scan.filter(
-                F.col("dt").between(
-                    F.from_unixtime(F.lit(start_ms // 1000)).cast("date"),
-                    F.from_unixtime(F.lit(end_ms // 1000)).cast("date"),
-                )
-            )
+        # on-disk rollup tables (the maintenance module's parquet) are
+        # day-partitioned like the datapoints: _scan prunes them alike
+        scan = _scan(table, spec, "bucket_ts", start_ms, end_ms)
         if self.rollup_invalid_dts:
             scan = self._splice_raw_fallback(scan, spec, start_ms, end_ms, unit)
         return scan, snapped
@@ -202,26 +204,13 @@ class TsdbContext:
         on the `dt` partition column, so at scale it scans only the
         invalidated days — everything else stays on the rollup table."""
         invalid = sorted(self.rollup_invalid_dts)
-        # on an on-disk (day-partitioned) rollup table the NOT-IN over the
-        # dt partition column is partition pruning; unpartitioned in-memory
-        # rollups fall back to deriving the day from bucket_ts
-        bucket_day = (
-            F.col("dt")
-            if "dt" in scan.columns
-            else F.to_date(F.timestamp_millis(F.col("bucket_ts")))
-        )
-        valid = scan.filter(~bucket_day.isin(invalid))
+        valid = scan.filter(~_day(scan, "bucket_ts").isin(invalid))
 
         raw = self._base_scan(spec, start_ms, end_ms)
-        day_col = (
-            F.col("dt")
-            if "dt" in raw.columns
-            else F.to_date(F.timestamp_millis(F.col("ts")))
-        )
-        raw = _by_series(raw.filter(day_col.isin(invalid)))
+        raw = _by_series(raw.filter(_day(raw, "ts").isin(invalid)))
         if "seq" in raw.columns:
             raw = dedup_last_wins(raw, ["metric", SERIES_KEY], seq_col="seq")
-        re_agg = _series_rollup(raw, "ts", unit, *_point_aggs())
+        re_agg = _series_rollup(raw, "ts", unit, *point_aggs())
         cols = ["metric", SERIES_KEY, "bucket_ts", "cnt", "min", "max", "sum", "tags"]
         return valid.select(*cols).unionByName(re_agg.select(*cols))
 
@@ -273,24 +262,10 @@ class TsdbContext:
                     *gcols,
                     bucket_expr("bucket_ts", snapped).alias("ts"),
                 )
-                tags_agg = F.first("tags").alias("__tags")
-                # sums are cast to double AFTER the final re-aggregation:
-                # with DECIMAL-valued rollups the Σ stays exact and the
-                # one deterministic decimal→double cast keeps results
-                # bit-identical across engines (see queries.q26/q27)
-                if func == "avg":
-                    out = grp.agg(
-                        (F.sum("sum").cast("double") / F.sum("cnt")).alias("value"),
-                        tags_agg,
-                    )
-                elif func == "count":
-                    out = grp.agg(F.sum("cnt").cast("double").alias("value"), tags_agg)
-                elif func == "min":
-                    out = grp.agg(F.min("min").cast("double").alias("value"), tags_agg)
-                elif func == "max":
-                    out = grp.agg(F.max("max").cast("double").alias("value"), tags_agg)
-                else:
-                    out = grp.agg(F.sum("sum").cast("double").alias("value"), tags_agg)
+                out = grp.agg(
+                    rollup_value_expr(func).alias("value"),
+                    F.first("tags").alias("__tags"),
+                )
                 return out, True
 
         base = _by_series(self._base_scan(spec, start_ms, end_ms))

@@ -2,7 +2,8 @@
 
 Replaces the reference's ingest-time RollupManager accumulators + rollup
 WAL (`src/agg/rollup.cpp:110-286`): a watermarked streaming aggregation
-over 1-hour event-time windows maintains per-series (cnt,min,max,sum).
+over 1-hour event-time windows maintains per-series (cnt,min,max,sum),
+the same aggregates the batch rollups use (operators.rollup.point_aggs).
 Late data within the watermark updates the open bucket (strictly better
 than the reference, which marks the hour invalid and falls back to raw —
 `rollup.cpp:237-243`); later-than-watermark data is handled by the
@@ -14,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ticktock_spark.operators.rollup import point_aggs
 from ticktock_spark.plans.planner import canonical_series_key
 
 
@@ -28,13 +30,7 @@ def streaming_rollup_1h(dps: DataFrame, watermark: str = "2 hours") -> DataFrame
     win = F.window("event_time", "1 hour")
     return (
         with_ts.groupBy("metric", "__series", win.alias("w"))
-        .agg(
-            F.count("value").alias("cnt"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-            F.sum("value").alias("sum"),
-            F.first("tags").alias("tags"),
-        )
+        .agg(*point_aggs(), F.first("tags").alias("tags"))
         .select(
             "metric",
             "__series",
